@@ -23,6 +23,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from georip_spark import functions as GF
+from georip_spark.pipeline import DEFAULT_CLASSES, _JOIN_KEYS, _doc_tiles, _plan
+
 BUCKET_COL = "_bucket"
 
 
@@ -159,15 +162,22 @@ def run_pipeline_with_lineage(
     store: StageStore,
     n_buckets: int = 16,
 ) -> DataFrame:
-    """The §3.1 pipeline with stage checkpoints: tiles and docs_out are
+    """build_dataset with stage checkpoints: its tiles and docs_out are
     bucketed by doc_id — a rerun after a crash recomputes only the
-    doc-buckets whose output is missing."""
-    from georip_spark.operators.tiling import tile_grid
-    from georip_spark.pipeline import assemble_docs, build_labels, class_map
-    from georip_spark.operators.joins import prepare_regions
-
-    tiles = store.run_stage(tile_grid(rasters), "tiles", "doc_id", n_buckets)
-    prepared = prepare_regions(regions)
-    labels = build_labels(tiles, prepared, class_map(regions))
-    docs = assemble_docs(tiles, labels)
+    doc-buckets whose output is missing. Between the two stages the
+    plan is build_dataset's own (pipeline._plan)."""
+    tiles = store.run_stage(_doc_tiles(rasters), "tiles", "doc_id", n_buckets)
+    if "region" in tiles.columns:
+        # The join keys are a function of doc_id. A stage whose older
+        # buckets were written without them reads back with null keys
+        # for those rows (or, by file order, without the columns — then
+        # build_labels parses them); re-derive the nulls.
+        tiles = tiles.withColumns({
+            k: F.coalesce(F.col(k), parsed)
+            for k, parsed in zip(_JOIN_KEYS, GF.parse_doc_id(F.col("doc_id")))
+        })
+    docs = _plan(
+        tiles, regions, res=None, keep_classes=DEFAULT_CLASSES, salt=None,
+        broadcast_regions=None, derive_tile_refs=True,
+    )["docs_out"]
     return store.run_stage(docs, "docs_out", "doc_id", n_buckets)

@@ -2,7 +2,7 @@
 column math — the whole-stage JVM replacement for the Arrow clip
 kernel on arbitrary (hole-free) polygons, not just rectangles.
 
-Why: the N→4N scaling profile (jobs/scaling_profile.py, NOTES.md)
+Why: the N→4N scaling profile (NOTES.md)
 shows the Arrow/Python lane is the one part of the hot stage that
 does not scale with cores — its effective bandwidth saturates while
 pure-JVM stages track the hardware ceiling. The rect fast path

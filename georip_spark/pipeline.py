@@ -59,6 +59,9 @@ PIPELINE_RES_SHUFFLE = 8
 
 _TILE_REF_RE = r"_tile_([0-9]+)_([0-9]+)$"
 
+# the join keys GF.parse_doc_id derives from doc_id
+_JOIN_KEYS = ("region", "start_year", "end_year")
+
 
 def _resolve_res(regions: DataFrame, res: int | str) -> int:
     """res="auto" → one dim-side stats job picks the grid resolution
@@ -129,9 +132,8 @@ def from_docs(
     regions: DataFrame,
     res: int | str | None = None,
     keep_classes=DEFAULT_CLASSES,
-    salt: int | None = None,
+    salt: int | str | None = None,
     broadcast_regions: bool | None = None,
-    any_holed: bool | None = None,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline FROM the contract docs table: the user
     hands (docs, raster metadata, truth regions) and gets the enriched
@@ -142,13 +144,39 @@ def from_docs(
     parity test); differs exactly where the docs table does (tiles
     added/removed upstream are respected, not re-derived).
 
-    res="auto" resolves the grid resolution from the dim's actual
-    geometry extents (auto_res) instead of DEFAULT_RES — the one
-    remaining magic constant a 100× geometry-size shift would
-    invalidate. The final output is res-invariant (cells only
-    generate candidates; clip decides), so correctness is unchanged —
-    res tunes candidate fan-out, not results. res=None picks the
-    regime-adaptive default (see PIPELINE_RES_* above)."""
+    res, salt (an int, or "auto" for data-driven per-key salting) and
+    broadcast_regions are decided as in build_dataset — the same
+    _plan runs on both entries' tiles."""
+    return _plan(
+        tiles_from_docs(docs, rasters), regions, res, keep_classes, salt,
+        broadcast_regions, derive_tile_refs=False,
+    )
+
+
+def _plan(
+    tiles: DataFrame,
+    regions: DataFrame,
+    res: int | str | None,
+    keep_classes,
+    salt: int | str | None,
+    broadcast_regions: bool | None,
+    derive_tile_refs: bool,
+) -> dict[str, DataFrame]:
+    """The plan every entry point shares, given its tiles: join regime
+    and grid resolution, the dim-side class pre-filter, prepare_regions,
+    build_labels and assemble_docs.
+
+    broadcast_regions=None decides from a cheap dim-side count:
+    Catalyst's size stats misestimate WKT-string tables badly (an
+    auto-broadcast OOM'd the driver at 384k regions), so the choice is
+    made from real cardinality — broadcast under 500k regions
+    (~100-250 MB hash relation), sort-merge + AQE skew join above.
+
+    res=None picks the regime-adaptive default (PIPELINE_RES_* above);
+    res="auto" resolves it from the dim's actual geometry extents
+    (auto_res). The output is res-invariant (cells only generate
+    candidates; the clip decides) — res tunes candidate fan-out, not
+    results."""
     if broadcast_regions is None:
         broadcast_regions = regions.count() <= 500_000
     if res is None:
@@ -157,28 +185,27 @@ def from_docs(
             else PIPELINE_RES_SHUFFLE
         )
     res = _resolve_res(regions, res)
-    tiles = tiles_from_docs(docs, rasters)
     classes = class_map(regions, keep_classes)
     # class pre-filter BEFORE the stats parse: dropped classes
     # (Background, out-of-set — ~38% of the synth dim) never pay the
     # per-row WKT parse, the fattest dim-side stage (round-6 pinned
-    # profile). Result-identical: build_labels dropped them anyway.
-    regions_f = regions.join(
-        F.broadcast(classes.filter(F.col("class_id") >= 0)),
-        "class_name", "inner",
+    # profile). A column-preserving filter, so geom_id hashes the
+    # caller's region columns; build_labels attaches class_id.
+    prepared = prepare_regions(
+        regions.filter(F.col("class_name").isin(_kept_names(keep_classes))),
+        res=res,
     )
-    prepared = prepare_regions(regions_f, res=res)
     labels = build_labels(
         tiles, prepared, classes, res=res, salt=salt,
-        broadcast_regions=broadcast_regions, any_holed=any_holed,
+        broadcast_regions=broadcast_regions,
+        derive_tile_refs=derive_tile_refs,
     )
-    docs_out = assemble_docs(tiles, labels)
     return {
         "tiles": tiles,
         "regions_prepared": prepared,
         "classes": classes,
         "labels": labels,
-        "docs_out": docs_out,
+        "docs_out": assemble_docs(tiles, labels),
     }
 
 
@@ -205,6 +232,11 @@ def align_regions_to_crs(
     ).withColumn(crs_col, F.lit(target_crs))
 
 
+def _kept_names(keep_classes) -> list[str]:
+    """The class names that map to a label id (class_id >= 0)."""
+    return sorted(n for n in keep_classes if n.lower() != "background")
+
+
 def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
     """Distinct kept class names → contiguous ids; Background := −1
     (get_mapped_classes, georip/modeling/yolo/__init__.py:142-174).
@@ -213,7 +245,7 @@ def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
     strings), so the map is built driver-side with zero Spark jobs and
     broadcast into the join — at 10^12 docs a distinct-scan over the
     fact table for a known dimension would be pure waste."""
-    names = sorted(n for n in keep_classes if n.lower() != "background")
+    names = _kept_names(keep_classes)
     rows = [(n, i) for i, n in enumerate(names)] + [("Background", -1)]
     return regions.sparkSession.createDataFrame(
         rows, "class_name string, class_id int"
@@ -221,9 +253,6 @@ def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
 
 
 _EPS64 = 2.220446049250313e-16  # np.finfo(float64).eps
-
-
-_TWO52 = 4503599627370496.0  # 2^52
 
 
 # shared with the general JVM clip path (operators/jvm_clip.py);
@@ -284,11 +313,8 @@ def build_labels(
     regions_prepared: DataFrame,
     classes: DataFrame,
     res: int = DEFAULT_RES,
-    salt: int | None = None,
+    salt: int | str | None = None,
     broadcast_regions: bool | None = None,
-    rect_fast: bool = True,
-    general_jvm: bool = True,
-    any_holed: bool | None = None,
     derive_tile_refs: bool = False,
 ) -> DataFrame:
     """Matched (tile × region) pairs → one label row per kept
@@ -296,10 +322,18 @@ def build_labels(
     normalized to [0,1] tile space (rounded 6 — F5 contract), sparse
     and Background rows dropped (A10/S12 empty-file semantics).
 
-    any_holed=None probes the dim (one limit-1 job) for holed valid
-    geometries to pick the clip plan; a caller that knows its dim
-    (bench loops, production jobs with a stable dim) passes True/False
-    to skip the probe — same hoisting contract as broadcast_regions.
+    salt is an int factor for hot cells or "auto" (per-key salting
+    decided from a sample of the build side), see
+    spatial_join_tiles_regions.
+
+    The clip is JVM column math for every input shape: canonical
+    rectangles take closed-form math, other hole-free geometries the
+    Sutherland–Hodgman clip over their shells. One limit-1 dim-side
+    job probes for valid holed geometries; only when it finds one does
+    the plan add a third, hole-aware arm over the full ring arrays —
+    it is the only arm correct on holed input, and planning it for a
+    hole-free dim made the benchmark action ~1.5× slower, so it is
+    planned from observed data.
 
     derive_tile_refs (guide §2.3 "shuffle fewer bytes", round 6): the
     caller asserts media_ref == tile_media_ref(doc_id, tile_row,
@@ -316,13 +350,7 @@ def build_labels(
     join keys after the join. Broadcast joins skip the rewrite — there
     is no probe exchange to slim, and reconstruction would run per
     MATCHED row (~2.6× per tile)."""
-    # derive (region, start_year, end_year) join keys from doc_id —
-    # the reference's filename-parse matching law (F2/J1); no-op if the
-    # caller already attached them
-    if "region" in tiles.columns:
-        tiles_keyed = tiles
-    else:
-        tiles_keyed = tiles.select("*", *GF.parse_doc_id(F.col("doc_id")))
+    tiles_keyed = _keyed(tiles)
     derive = bool(derive_tile_refs) and not broadcast_regions
     if derive:
         rebuild = GF.build_doc_id(
@@ -333,20 +361,13 @@ def build_labels(
             F.when(F.col("doc_id") == rebuild, F.lit(None).cast("string"))
             .otherwise(F.col("doc_id")),
         ).drop("doc_id", "media_ref")
-    # Plan probe BEFORE the join (dim-side, one cheap limit-1 job):
-    # holed geometries need the hole-aware clip (jvm_clip.…_mp, which
-    # wants the full nested ring arrays), hole-free ones the cheaper
-    # shell-only paths. Under general_jvm EVERY arm is pure JVM column
-    # math, so the WKT string — the fattest dim column — is always
-    # dead weight after the join and is shed from the carry (shells /
-    # rings arrays replace it); the Arrow kernel remains only as the
-    # general_jvm=False escape hatch / A-B oracle.
-    if any_holed is None:
-        any_holed = not general_jvm or regions_prepared.filter(
-            F.col("is_valid") & F.col("has_holes")
-        ).limit(1).count() > 0
-    any_holed = rect_fast and (any_holed or not general_jvm)
-    if rect_fast and general_jvm and any_holed:
+    # Clip-plan probe BEFORE the join (dim-side, one cheap limit-1
+    # job): holed geometries need the hole-aware clip
+    # (jvm_clip.…_mp, which wants the full nested ring arrays).
+    any_holed = regions_prepared.filter(
+        F.col("is_valid") & F.col("has_holes")
+    ).limit(1).count() > 0
+    if any_holed:
         # nested ring arrays, materialized dim-side for holed rows
         # only (the CASE arm keeps hole-free rows from paying the
         # second parse); invalid rows are Backgrounded before the clip
@@ -360,15 +381,16 @@ def build_labels(
                 ),
             ),
         )
-    # area / is_empty / geom_id are never read after the join on this
-    # path (is_empty already zeroed the cover; class encoding keys on
+    # Every clip arm is JVM column math over the shells / rings arrays,
+    # so the WKT string — the fattest dim column — is dead weight after
+    # the join; area / is_empty / geom_id are never read after it
+    # either (is_empty already zeroed the cover; class encoding keys on
     # is_valid; assemble keys on class_id/label) — shed them dim-side
     # so neither the build exchange nor the per-partition hash
     # relation carries them (guide §2.3; the r5 attribution charges
     # this host's non-scaling exactly to hash-relation alloc churn)
-    _dead = ("area", "is_empty", "geom_id", "is_valid", "class_name")
     exclude = (
-        ("geometry", *_dead) if (rect_fast and general_jvm) else _dead
+        "geometry", "area", "is_empty", "geom_id", "is_valid", "class_name",
     )
     # Class + validity filter moved to the DIM side (guide §2.3
     # "aggregate/filter before you shuffle", round 6): every label row
@@ -382,10 +404,7 @@ def build_labels(
     # post-join class join disappears too. Result-identical: the
     # dropped rows are exactly those the old
     # `when(~is_valid, -1)` + `filter(class_id >= 0)` pair removed.
-    # (build_dataset/from_docs attach class_id BEFORE prepare_regions
-    # so the dropped rows never pay the WKT stats parse either — the
-    # dim prep was ~10s of the pinned 4-core profile; skip the join
-    # here when it already happened upstream)
+    # (skip the join when the caller already attached class_id)
     if "class_id" not in regions_prepared.columns:
         pos_classes = classes.filter(F.col("class_id") >= 0)
         regions_prepared = regions_prepared.join(
@@ -396,15 +415,14 @@ def build_labels(
         # `>= 0` pair: it kept rows whose is_valid was true OR null
         regions_prepared.filter(F.col("is_valid").isNull() | F.col("is_valid"))
     )
-    if rect_fast and general_jvm:
-        # canonical rectangles never read their shell array (the
-        # closed-form rect path wins the CASE) — null it dim-side so
-        # the broadcast/shuffle relation stays skinny for the dominant
-        # row class (guide §2.3 "project before the exchange")
-        regions_prepared = regions_prepared.withColumn(
-            "shells",
-            F.when(~F.col("is_rect_blccw"), F.col("shells")),
-        )
+    # canonical rectangles never read their shell array (the
+    # closed-form rect path wins the CASE) — null it dim-side so
+    # the broadcast/shuffle relation stays skinny for the dominant
+    # row class (guide §2.3 "project before the exchange")
+    regions_prepared = regions_prepared.withColumn(
+        "shells",
+        F.when(~F.col("is_rect_blccw"), F.col("shells")),
+    )
     # refine=False: the clip paths below null empty intersections, so
     # the separate exact-intersects Python pass would be redundant work
     joined = spatial_join_tiles_regions(
@@ -416,7 +434,7 @@ def build_labels(
         salt=salt,
         broadcast_regions=broadcast_regions,
         refine=False,
-        keep_region_bbox=rect_fast,
+        keep_region_bbox=True,
         exclude_carry=exclude,
     )
     if derive:
@@ -441,78 +459,44 @@ def build_labels(
     # class filter (P4) and invalid→Background(−1) encoding
     # (georip/datasets/utils.py:357-371) both moved DIM-side above:
     # class_id arrives attached and every joined row already satisfies
-    # class_id >= 0 with a valid geometry
-    labeled = joined
-    kernel_coords = geom_udfs.clip_and_normalize(
-        F.col("geometry"), F.col("minx"), F.col("miny"),
-        F.col("maxx"), F.col("maxy"),
+    # class_id >= 0 with a valid geometry.
+    # The rect fast path and the S-H trees are built from FIXED column
+    # names, so the (expensive, py4j-built) Columns are memoized — see
+    # exprcache module docstring for the measured driver-second costs
+    # this removes from every re-plan. All arms are bit-identical to
+    # the Arrow kernel (geom_udfs.clip_and_normalize, the tests' parity
+    # oracle), so the hot stage has NO ArrowEvalPython for any input.
+    coords = F.when(
+        F.col("is_rect_blccw"),
+        cached_column(("pipeline.rect_clip",), _rect_clip_coords),
     )
-    if not rect_fast:
-        labeled = labeled.withColumn("coords", kernel_coords)
-    else:
-        # Canonical rectangles take closed-form column math; every
-        # OTHER hole-free geometry takes the general JVM
-        # Sutherland–Hodgman (jvm_clip — HOFs over the dim-parsed
-        # shell arrays, bit-identical to the kernel, 0/4000 mismatch
-        # property sweep). When no valid region has holes (the
-        # any_holed probe above) the hot stage has NO ArrowEvalPython
-        # at all.
-        # the rect fast path and the S-H trees are built from FIXED
-        # column names, so the (expensive, py4j-built) Columns are
-        # memoized — see exprcache module docstring for the measured
-        # driver-second costs this removes from every re-plan
-        fast = cached_column(("pipeline.rect_clip",), _rect_clip_coords)
-        gen = cached_column(
-            ("pipeline.gen_clip",),
-            lambda: jvm_clip.clip_normalize_coords(
-                F.col("shells"), F.col("minx"), F.col("miny"),
+    gen = cached_column(
+        ("pipeline.gen_clip",),
+        lambda: jvm_clip.clip_normalize_coords(
+            F.col("shells"), F.col("minx"), F.col("miny"),
+            F.col("maxx"), F.col("maxy"),
+            g_bbox=(F.col("g_minx"), F.col("g_miny"),
+                    F.col("g_maxx"), F.col("g_maxy")),
+        ),
+    )
+    if any_holed:
+        # holed rows: hole-aware S-H over the full ring arrays (largest
+        # |shell|−Σ|holes| part selection, jvm_clip.…_mp)
+        gen_mp = cached_column(
+            ("pipeline.gen_clip_mp",),
+            lambda: jvm_clip.clip_normalize_coords_mp(
+                F.col("rings"), F.col("minx"), F.col("miny"),
                 F.col("maxx"), F.col("maxy"),
                 g_bbox=(F.col("g_minx"), F.col("g_miny"),
                         F.col("g_maxx"), F.col("g_maxy")),
             ),
         )
-        if not any_holed:
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast).otherwise(gen),
-            )
-        elif general_jvm:
-            # three-way, ALL JVM: rect column math / hole-free S-H
-            # over shells / holed rows hole-aware S-H over the full
-            # ring arrays (largest |shell|−Σ|holes| part selection,
-            # jvm_clip.clip_normalize_coords_mp) — zero Python on the
-            # hot stage for EVERY input shape.
-            gen_mp = cached_column(
-                ("pipeline.gen_clip_mp",),
-                lambda: jvm_clip.clip_normalize_coords_mp(
-                    F.col("rings"), F.col("minx"), F.col("miny"),
-                    F.col("maxx"), F.col("maxy"),
-                    g_bbox=(F.col("g_minx"), F.col("g_miny"),
-                            F.col("g_maxx"), F.col("g_maxy")),
-                ),
-            )
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast)
-                .when(~F.col("has_holes"), gen)
-                .otherwise(gen_mp),
-            )
-        else:
-            # general_jvm=False (A/B benchmarking escape hatch /
-            # kernel oracle): rect column math, everything else the
-            # Arrow kernel (geometry masked for rects so Python parses
-            # nothing for them) — the round-3 hybrid plan.
-            masked = geom_udfs.clip_and_normalize(
-                F.when(F.col("is_rect_blccw"), F.lit("POLYGON EMPTY"))
-                .otherwise(F.col("geometry")),
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy"),
-            )
-            labeled = labeled.withColumn(
-                "coords",
-                F.when(F.col("is_rect_blccw"), fast).otherwise(masked),
-            )
-        labeled = labeled.drop("g_minx", "g_miny", "g_maxx", "g_maxy")
-    labeled = labeled.drop("shells", "has_holes", "rings")
+        coords = coords.when(~F.col("has_holes"), gen).otherwise(gen_mp)
+    else:
+        coords = coords.otherwise(gen)
+    labeled = joined.withColumn("coords", coords).drop(
+        "g_minx", "g_miny", "g_maxx", "g_maxy", "shells", "has_holes", "rings",
+    )
     labeled = labeled.filter(F.col("coords").isNotNull())
     # drop degenerate clipped slivers: reference prunes sparse
     # intersections (gdf_intersects…non-sparsely,
@@ -588,69 +572,41 @@ def build_dataset(
     regions: DataFrame,
     res: int | str | None = None,
     keep_classes=DEFAULT_CLASSES,
-    salt: int | None = None,
+    salt: int | str | None = None,
     broadcast_regions: bool | None = None,
-    any_holed: bool | None = None,
 ) -> dict[str, DataFrame]:
     """The full forward pipeline. Returns every intermediate so tests
     and jobs can tap any stage.
 
-    broadcast_regions=None decides from a cheap dim-side count:
-    Catalyst's size stats misestimate WKT-string tables badly (an
-    auto-broadcast OOM'd the driver at 384k regions), so the choice is
-    made from real cardinality — broadcast under 500k regions
-    (~100-250 MB hash relation), sort-merge + AQE skew join above.
+    broadcast_regions=None decides the join regime from the regions'
+    real cardinality; res=None is regime-adaptive, res="auto"
+    data-driven; salt is an int factor or "auto" — see _plan."""
+    return _plan(
+        _doc_tiles(rasters), regions, res, keep_classes, salt,
+        broadcast_regions, derive_tile_refs=True,
+    )
 
-    res="auto": data-driven grid resolution; res=None (default) is
-    regime-adaptive — see PIPELINE_RES_* and from_docs."""
-    if broadcast_regions is None:
-        broadcast_regions = regions.count() <= 500_000
-    if res is None:
-        res = (
-            PIPELINE_RES_BROADCAST if broadcast_regions
-            else PIPELINE_RES_SHUFFLE
-        )
-    res = _resolve_res(regions, res)
-    # Parse the (region, start_year, end_year) join keys from doc_id
-    # BEFORE the ~100× tile fan-out: the regexes run once per RASTER
-    # row instead of once per tile, and build_labels sees the keys
-    # already attached (its "region" in tiles.columns no-op branch).
-    if "region" in rasters.columns:
-        rasters_keyed = rasters
-    else:
-        rasters_keyed = rasters.select(
-            "*", *GF.parse_doc_id(F.col("doc_id"))
-        )
-    # Establish doc partitioning BEFORE the fan-out: one cheap shuffle
-    # of the compact raster rows replaces the post-fan-out shuffle of
-    # every media+label row — tile_grid's Generate chain, the
-    # broadcast join and the clip all preserve hashpartitioning, so
-    # assemble_docs' two aggregations and doc join need no exchange.
-    rasters_keyed = rasters_keyed.repartition(F.col("doc_id"))
-    # keep= carries the keys through the fan-out select, so the parse
-    # really does run once per raster — without it build_labels hits
-    # its "region not in columns" branch and re-parses per TILE row
-    # (3 regex/split evals × ~100 tiles/doc in the hot fan-out stage)
-    tiles = tile_grid(
-        rasters_keyed, keep=("region", "start_year", "end_year")
+
+def _keyed(df: DataFrame) -> DataFrame:
+    """Attach the (region, start_year, end_year) join keys parsed from
+    doc_id — the reference's filename-parse matching law (F2/J1); a
+    no-op when the caller already attached them."""
+    if "region" in df.columns:
+        return df
+    return df.select("*", *GF.parse_doc_id(F.col("doc_id")))
+
+
+def _doc_tiles(rasters: DataFrame) -> DataFrame:
+    """tile_grid over keyed, doc-partitioned rasters.
+
+    The keys are parsed BEFORE the ~100× tile fan-out and carried
+    through it (keep=), so the regexes run once per RASTER row instead
+    of once per tile. The doc partitioning is established before the
+    fan-out too: one cheap shuffle of the compact raster rows replaces
+    the post-fan-out shuffle of every media+label row — tile_grid's
+    Generate chain, the broadcast join and the clip all preserve
+    hashpartitioning, so assemble_docs' two aggregations and doc join
+    need no exchange."""
+    return tile_grid(
+        _keyed(rasters).repartition(F.col("doc_id")), keep=_JOIN_KEYS,
     )
-    classes = class_map(regions, keep_classes)
-    # class pre-filter before the WKT stats parse — see from_docs
-    regions_f = regions.join(
-        F.broadcast(classes.filter(F.col("class_id") >= 0)),
-        "class_name", "inner",
-    )
-    prepared = prepare_regions(regions_f, res=res)
-    labels = build_labels(
-        tiles, prepared, classes, res=res, salt=salt,
-        broadcast_regions=broadcast_regions, any_holed=any_holed,
-        derive_tile_refs=True,
-    )
-    docs_out = assemble_docs(tiles, labels)
-    return {
-        "tiles": tiles,
-        "regions_prepared": prepared,
-        "classes": classes,
-        "labels": labels,
-        "docs_out": docs_out,
-    }

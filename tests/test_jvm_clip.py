@@ -280,12 +280,14 @@ class TestPlanShape:
         assert plan.count("ArrowEvalPython") == 0
 
     def test_holed_regions_stay_jvm(self, spark):
-        """A polygon WITH a hole routes through the hole-aware JVM
-        clip (clip_normalize_coords_mp) — NO Arrow node anywhere in
-        the plan — and produces the kernel's hole-aware selection."""
-        from georip_spark.operators.joins import prepare_regions
-        from georip_spark.pipeline import build_labels, class_map
-        from georip_spark.operators.tiling import tile_grid
+        """A dim with a rectangle, a triangle and a polygon WITH a hole
+        plans all three clip arms in one build_dataset plan — rect
+        column math, hole-free S-H, hole-aware S-H
+        (clip_normalize_coords_mp) — with NO Arrow node anywhere, and
+        every arm matches the Arrow kernel."""
+        from kernel_oracle import kernel_labels
+
+        from georip_spark.pipeline import build_dataset
 
         rasters = spark.createDataFrame(
             [("R1_2019to2020_X", 128, 128, 64, 64,
@@ -293,23 +295,35 @@ class TestPlanShape:
             "doc_id string, width int, height int, tile_size int, "
             "stride int, transform map<string,double>",
         )
+        geoms = [
+            "POLYGON ((5 5, 50 5, 50 30, 5 30, 5 5))",
+            "POLYGON ((70 20, 120 35, 90 120, 70 20))",
+            "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
+            "(40 40, 60 40, 60 60, 40 60, 40 40))",
+        ]
         regions = spark.createDataFrame(
-            [("R1", 2019, 2020, "Treatment",
-              "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
-              "(40 40, 60 40, 60 60, 40 60, 40 40))")],
+            [("R1", 2019, 2020, "Treatment", g) for g in geoms],
             "region string, start_year int, end_year int, "
             "class_name string, geometry string",
         )
-        tiles = tile_grid(rasters)
-        prep = prepare_regions(regions)
-        labels = build_labels(tiles, prep, class_map(regions))
+        out = build_dataset(rasters, regions)
+        stats = {
+            r["geometry"]: (r["is_rect_blccw"], r["has_holes"])
+            for r in out["regions_prepared"].collect()
+        }
+        assert [stats[g] for g in geoms] == [
+            (True, False), (False, False), (False, True)
+        ]
+        labels = out["labels"]
         rows = labels.select("media_ref", "label").collect()
-        assert len(rows) > 0
         plan = labels._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan  # holed rows clip JVM-side too
 
-        # and the result equals the kernel-only configuration
-        slow = build_labels(
-            tiles, prep, class_map(regions), rect_fast=False
-        ).select("media_ref", "label").collect()
+        # every region clips into some tile, and the result equals the
+        # kernel-only labels
+        kern = kernel_labels(
+            out["tiles"], out["regions_prepared"], out["classes"]
+        )
+        assert kern.select("geom_id").distinct().count() == len(geoms)
+        slow = kern.select("media_ref", "label").collect()
         assert sorted(map(tuple, rows)) == sorted(map(tuple, slow))

@@ -183,18 +183,20 @@ def test_broadcast_join_same_result(spark, tiny, engine_out):
     )
 
 
-def test_any_holed_hoist_same_result(spark, tiny, engine_out):
-    """any_holed=True/False (the hoisted clip-plan decision, same
-    contract as broadcast_regions) must be result-invariant: the synth
-    corpus is hole-free, so False selects the all-JVM plan the probe
-    would pick, and True forces the three-way hybrid with the masked
-    Arrow kernel — both bit-identical to the default probed plan."""
-    rasters, regions = tiny
-    for forced in (False, True):
-        got = build_dataset(rasters, regions, any_holed=forced)
-        assert spans_from_engine(got["docs_out"]) == spans_from_engine(
-            engine_out["docs_out"]
-        ), f"any_holed={forced} changed the output"
+def test_regions_prepared_geom_id_stable(spark, tiny, engine_out):
+    """The class pre-filter keeps the region columns as they are, so
+    the pipeline's geom_id is prepare_regions' geom_id for the same
+    rows."""
+    from georip_spark.operators.joins import prepare_regions
+
+    _, regions = tiny
+
+    def ids(prep):
+        return sorted(tuple(r) for r in prep.select("geometry", "geom_id").collect())
+
+    kept = prepare_regions(regions).filter(F.col("class_name") == "Treatment")
+    got = ids(engine_out["regions_prepared"])
+    assert got and got == ids(kept)
 
 
 def test_from_docs_parity(spark, tiny, engine_out):
@@ -251,19 +253,20 @@ def test_tiles_from_docs_respects_doc_table(spark, tiny):
 
 class TestRectFastPath:
     """Round-4 JVM fast path for rectangle clip+normalize: must be
-    bit-identical to the Arrow kernel path (the e2e oracle tests above
-    already run the default/fast configuration; these pin fast ==
-    kernel row-for-row and the detection predicate)."""
+    bit-identical to the Arrow kernel, tests/kernel_oracle.py (the e2e
+    oracle tests above already run the default/fast configuration;
+    these pin fast == kernel row-for-row and the detection
+    predicate)."""
 
     def test_fast_equals_kernel_exactly(self, spark, tiny, engine_out):
-        from georip_spark.pipeline import build_labels, class_map
+        from kernel_oracle import kernel_labels
+
+        from georip_spark.pipeline import class_map
         from georip_spark.operators.joins import prepare_regions
 
         rasters, regions = tiny
-        prep = prepare_regions(regions)
-        cls = class_map(regions)
-        slow = build_labels(
-            engine_out["tiles"], prep, cls, rect_fast=False
+        slow = kernel_labels(
+            engine_out["tiles"], prepare_regions(regions), class_map(regions)
         )
         fast_rows = sorted(
             tuple(r) for r in
