@@ -302,7 +302,13 @@ def neardup_dedup(
 
     collapse = collapse_exact and tau <= 1.0
     if collapse:
-        fp = F.md5(F.col(text_col))
+        # null-safe fingerprint: md5(NULL) is NULL and would never match
+        # the equi-join, losing the row; each null-text doc is its own
+        # group instead (a NUL-prefixed key no md5 hex digest equals)
+        fp = F.coalesce(
+            F.md5(F.col(text_col)),
+            F.concat(F.lit("\0nulltext:"), F.col(id_col).cast("string")),
+        )
         groups = df.groupBy(fp.alias("_fp")).agg(F.min(id_col).alias("_rep"))
         members = df.select(F.col(id_col).alias("_mid"), fp.alias("_fp")).join(
             groups, "_fp"

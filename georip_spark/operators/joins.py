@@ -148,16 +148,11 @@ def spatial_join_tiles_regions(
     ]
     build = g.select(*keys, *carry, F.explode("cover").alias("cell"))
 
-    # A broadcast join keeps the probe side's input partitioning; a
-    # small file (or coalesced scan) would funnel the whole candidate
-    # stream — and the Python refinement — through one task. Fan out
-    # under-parallel probes first; at real scale the scan already has
-    # thousands of splits and this is a no-op.
-    default_par = tiles.sparkSession.sparkContext.defaultParallelism
-    if tiles.rdd.getNumPartitions() < 2 * default_par:
-        # 4·par: see tiling.tile_grid — one wave of fat tasks loses
-        # to any straggler; 4 waves pack the cores
-        tiles = tiles.repartition(4 * default_par)
+    # A broadcast join keeps the probe side's input partitioning, so
+    # the tiles' producer sets it: tile_grid and tiles_from_docs both
+    # emit 4·par doc-hash slices (tiling.doc_partitioned). Reading the
+    # partition count here instead would run every shuffle map stage
+    # below the tiles once more while planning.
 
     # Probe-side cover as TWO explode(sequence) generators + packed-id
     # column math instead of explode(cover_bbox_expr(...)): a
@@ -463,11 +458,15 @@ def _knn_small_right(
             out["rn"] = (rank_all + 1).astype("int32")
             yield out
 
-    # fan out an under-parallel probe scan (same rationale as
-    # spatial_join_tiles_regions: a 2-split scan would run the whole
-    # stage 2-wide); at real scale the scan has thousands of splits
+    # fan out an under-parallel probe (a 2-split scan would run the
+    # whole stage 2-wide). The count is the one the physical plan
+    # declares before it runs — an explicit repartition's; 0 for a file
+    # or local scan, whose splits are known only at run time — so the
+    # check launches no job, where .rdd.getNumPartitions() ran every
+    # shuffle map stage below ``left`` once more.
     par = spark.sparkContext.defaultParallelism
-    if left.rdd.getNumPartitions() < 2 * par:
+    planned = left._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if planned.numPartitions() < 2 * par:
         left = left.repartition(4 * par)
     return left.mapInPandas(topk, out_schema)
 

@@ -74,12 +74,35 @@ def _parse_point(body: Column) -> Column:
     return F.array(F.array(F.array(pt))).cast(_MP_TYPE)
 
 
+def _collapse_ws(wkt: Column) -> Column:
+    """Drop the whitespace around structural characters '(' ')' ','."""
+    return F.regexp_replace(wkt, r"\s*([(),])\s*", "$1")
+
+
+# A ring separator '),(' that is not the polygon separator ')),((':
+# its left flank is not ')' or its right flank is not '('.
+_RING_SEP_RE = r"[^)]\),\(|\),\([^(]"
+
+
+def may_have_holes(wkt_col: Column) -> Column:
+    """Text pre-test for holed WKT, without the parse: true wherever
+    geom_stats_struct's ``is_valid & has_holes`` is. A holed row has a
+    polygon piece (after the ')),((' split) that splits on '),(' into
+    rings whose coordinates all cast. Inside the piece a separator has
+    a coordinate character on its left (no piece contains ')),(('); at
+    the piece's start its left flank is the '(' of the polygon
+    separator or of the outer '((', at its end its right flank is a
+    ')'. False on hole-free polygons and multipolygons; null for a
+    null WKT."""
+    return _collapse_ws(wkt_col).rlike(_RING_SEP_RE)
+
+
 def _parse_poly_body(mpbody: Column) -> Column:
     """Normalized multipolygon body -> mp arrays (nulls where a
     coordinate fails to cast; the caller turns those into EMPTY)."""
     # collapse whitespace around structural characters, then strip
     # the outer '((' … '))' so three literal splits do the nesting
-    nb = F.regexp_replace(mpbody, r"\s*([(),])\s*", "$1")
+    nb = _collapse_ws(mpbody)
 
     def parse_pt(pt_s: Column) -> Column:
         toks = F.filter(F.split(pt_s, r"\s+"), lambda t: t != F.lit(""))

@@ -16,10 +16,10 @@ to the window's 4 corners (create_tile_polygon,
 georip/geometry/polygons.py:217-249).
 
 Here the double loop is ``explode(sequence(...)) × explode(sequence(...))``
-— fully JVM-side, whole-stage codegen, no Python. One input raster row
-fans out to its tiles inside the scan stage: no shuffle at all. At
-100 TB (billions of tiles) the fan-out is embarrassingly parallel and
-partition-local; downstream ops decide their own partitioning.
+— fully JVM-side, whole-stage codegen, no Python. The compact raster
+rows are hash-partitioned by doc_id once (``doc_partitioned``); each
+then fans out to its tiles partition-locally, so every consumer
+downstream inherits the doc partitioning.
 """
 
 from __future__ import annotations
@@ -46,23 +46,10 @@ def tile_grid(
     build_dataset passes its pre-parsed (region, start_year, end_year)
     join keys so build_labels never re-derives them per TILE row
     (guide §1.2 per-task work: the doc_id regex+split ran ~100× per
-    raster in the fan-out stage, round-6 profile)."""
-    # Fan out under-parallel inputs BEFORE the ×100 tile explode: a
-    # single-file parquet scan is ONE partition, and the entire
-    # fan-out (plus everything downstream until the next shuffle)
-    # would run in one task (measured 6-39s single-threaded for 2M
-    # tiles vs <2s fanned out). Shuffling the compact raster rows
-    # costs ~nothing; at real scale the scan already has thousands of
-    # splits and this is a no-op.
-    # 4·par slices, not par: everything from here to the next shuffle
-    # (fan-out, footprint math, join probe, clip UDF) runs in these
-    # tasks — at par slices that is ONE wave of fat tasks where a
-    # single straggler holds the whole stage; 4 waves pack ~95%
-    # (measured round 2, re-measured round 3 when the stored-input
-    # bench resurrected the 1-wave shape through a tiny parquet scan).
-    par = rasters.sparkSession.sparkContext.defaultParallelism
-    if rasters.rdd.getNumPartitions() < 2 * par:
-        rasters = rasters.repartition(4 * par)
+    raster in the fan-out stage, round-6 profile).
+
+    The output is hash-partitioned by doc_id (``doc_partitioned``)."""
+    rasters = doc_partitioned(rasters)
     df = rasters.withColumn(
         "tile_row", F.explode(F.sequence(F.lit(0), F.col("height") - 1, F.col("stride")))
     ).withColumn(
@@ -86,6 +73,25 @@ def tile_grid(
     if with_footprint:
         df = with_footprint_bbox(df)
     return df.drop("transform")
+
+
+def doc_partitioned(df: DataFrame) -> DataFrame:
+    """``df`` hash-partitioned by doc_id into 4·defaultParallelism
+    slices, set at plan time with no Spark job.
+
+    Done on the compact per-doc rows BEFORE a ~100× tile fan-out:
+    - the fan-out, footprint math, join probe and clip all run in
+      these tasks, and a tiny single-file scan would otherwise run
+      them in one task (measured 6-39s single-threaded for 2M tiles vs
+      <2s fanned out);
+    - 4·par, not par: at par slices one wave of fat tasks waits on any
+      straggler, 4 waves pack ~95% of the cores (rounds 2 and 3);
+    - the explicit count makes the shuffle REPARTITION_BY_NUM, which
+      AQE does not coalesce, and the doc hash survives the Generate
+      chain and a broadcast join, so assemble_docs' per-doc
+      aggregations and doc join plan with no exchange."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(4 * par, "doc_id")
 
 
 def with_footprint_bbox(tiles: DataFrame) -> DataFrame:

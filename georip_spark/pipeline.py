@@ -28,7 +28,11 @@ from georip_spark.operators.joins import (
     prepare_regions,
     spatial_join_tiles_regions,
 )
-from georip_spark.operators.tiling import tile_grid, with_footprint_bbox
+from georip_spark.operators.tiling import (
+    doc_partitioned,
+    tile_grid,
+    with_footprint_bbox,
+)
 
 DEFAULT_CLASSES = ("Treatment", "Background")
 
@@ -89,8 +93,10 @@ def tiles_from_docs(docs: DataFrame, rasters: DataFrame) -> DataFrame:
     would shuffle ~100× more rows for the same result.
 
     Scale shape: one equi-join of two doc-keyed tables (sort-merge or
-    broadcast as Catalyst sizes it), then a partition-local explode +
-    column math; no extra shuffle beyond the join itself.
+    broadcast as Catalyst sizes it), its output hash-partitioned by
+    doc_id into 4·par slices (tiling.doc_partitioned, as tile_grid
+    does), then a partition-local explode + column math. The tiles
+    therefore carry the doc partitioning assemble_docs needs.
     """
     meta = rasters.select(
         "doc_id", "width", "height", "tile_size", "stride", "transform"
@@ -99,7 +105,7 @@ def tiles_from_docs(docs: DataFrame, rasters: DataFrame) -> DataFrame:
     # row, BEFORE the media-span fan-out — build_labels then skips its
     # per-tile parse branch (3 regex/split evals per span otherwise;
     # guide §1.2 per-task work in the hottest stage)
-    d = docs.join(meta, "doc_id").select(
+    d = doc_partitioned(docs.join(meta, "doc_id")).select(
         "*", *GF.parse_doc_id(F.col("doc_id"))
     )
     m = d.select(
@@ -166,19 +172,32 @@ def _plan(
     and grid resolution, the dim-side class pre-filter, prepare_regions,
     build_labels and assemble_docs.
 
-    broadcast_regions=None decides from a cheap dim-side count:
-    Catalyst's size stats misestimate WKT-string tables badly (an
-    auto-broadcast OOM'd the driver at 384k regions), so the choice is
-    made from real cardinality — broadcast under 500k regions
-    (~100-250 MB hash relation), sort-merge + AQE skew join above.
+    Planning launches no fact-side job and one dim-side job: a single
+    aggregate over the raw regions scan answers both questions the
+    plan asks of the dim.
+    - Whether a kept-class region may be holed (_any_holed, a text
+      test on the WKT). Only then is the hole-aware clip arm planned.
+    - With broadcast_regions=None, the region count: Catalyst's size
+      stats misestimate WKT-string tables badly (an auto-broadcast
+      OOM'd the driver at 384k regions), so the regime is chosen from
+      real cardinality — broadcast under 500k regions (~100-250 MB
+      hash relation), sort-merge + AQE skew join above.
 
     res=None picks the regime-adaptive default (PIPELINE_RES_* above);
     res="auto" resolves it from the dim's actual geometry extents
-    (auto_res). The output is res-invariant (cells only generate
-    candidates; the clip decides) — res tunes candidate fan-out, not
-    results."""
+    (auto_res, one more dim-side job). The output is res-invariant
+    (cells only generate candidates; the clip decides) — res tunes
+    candidate fan-out, not results."""
+    kept = _kept_names(keep_classes)
+    probes = [
+        _any_holed(F.when(F.col("class_name").isin(kept), F.col("geometry")))
+        .alias("holed")
+    ]
     if broadcast_regions is None:
-        broadcast_regions = regions.count() <= 500_000
+        probes.append(F.count("*").alias("n"))
+    dim = regions.agg(*probes).first()
+    if broadcast_regions is None:
+        broadcast_regions = dim["n"] <= 500_000
     if res is None:
         res = (
             PIPELINE_RES_BROADCAST if broadcast_regions
@@ -192,13 +211,11 @@ def _plan(
     # profile). A column-preserving filter, so geom_id hashes the
     # caller's region columns; build_labels attaches class_id.
     prepared = prepare_regions(
-        regions.filter(F.col("class_name").isin(_kept_names(keep_classes))),
-        res=res,
+        regions.filter(F.col("class_name").isin(kept)), res=res,
     )
-    labels = build_labels(
-        tiles, prepared, classes, res=res, salt=salt,
-        broadcast_regions=broadcast_regions,
-        derive_tile_refs=derive_tile_refs,
+    labels = _labels(
+        tiles, prepared, classes, res, salt, broadcast_regions,
+        derive_tile_refs, dim["holed"],
     )
     return {
         "tiles": tiles,
@@ -328,12 +345,13 @@ def build_labels(
 
     The clip is JVM column math for every input shape: canonical
     rectangles take closed-form math, other hole-free geometries the
-    Sutherland–Hodgman clip over their shells. One limit-1 dim-side
-    job probes for valid holed geometries; only when it finds one does
-    the plan add a third, hole-aware arm over the full ring arrays —
-    it is the only arm correct on holed input, and planning it for a
-    hole-free dim made the benchmark action ~1.5× slower, so it is
-    planned from observed data.
+    Sutherland–Hodgman clip over their shells. One dim-side aggregate
+    (_any_holed, a text test over regions_prepared.geometry; _plan
+    folds it into its own dim job instead) asks whether any region may
+    be holed; only then does the plan add a third, hole-aware arm over
+    the full ring arrays — it is the only arm correct on holed input,
+    and planning it for a hole-free dim made the benchmark action
+    ~1.5× slower, so it is planned from observed data.
 
     derive_tile_refs (guide §2.3 "shuffle fewer bytes", round 6): the
     caller asserts media_ref == tile_media_ref(doc_id, tile_row,
@@ -350,6 +368,34 @@ def build_labels(
     join keys after the join. Broadcast joins skip the rewrite — there
     is no probe exchange to slim, and reconstruction would run per
     MATCHED row (~2.6× per tile)."""
+    holed = regions_prepared.agg(_any_holed(F.col("geometry"))).first()[0]
+    return _labels(
+        tiles, regions_prepared, classes, res, salt, broadcast_regions,
+        derive_tile_refs, holed,
+    )
+
+
+def _any_holed(geometry: Column) -> Column:
+    """Aggregate: whether any WKT in ``geometry`` may be holed
+    (jvm_wkt.may_have_holes, a superset of ``is_valid & has_holes``
+    read from the text without the stats parse). A dim whose only
+    holed regions are invalid therefore plans the hole-aware arm too:
+    correct, just slower than the two-way CASE."""
+    return F.coalesce(F.max(jvm_wkt.may_have_holes(geometry)), F.lit(False))
+
+
+def _labels(
+    tiles: DataFrame,
+    regions_prepared: DataFrame,
+    classes: DataFrame,
+    res: int,
+    salt: int | str | None,
+    broadcast_regions: bool | None,
+    derive_tile_refs: bool,
+    holed: bool,
+) -> DataFrame:
+    """build_labels with the holed answer given: plans the hole-aware
+    clip arm iff ``holed``."""
     tiles_keyed = _keyed(tiles)
     derive = bool(derive_tile_refs) and not broadcast_regions
     if derive:
@@ -361,13 +407,9 @@ def build_labels(
             F.when(F.col("doc_id") == rebuild, F.lit(None).cast("string"))
             .otherwise(F.col("doc_id")),
         ).drop("doc_id", "media_ref")
-    # Clip-plan probe BEFORE the join (dim-side, one cheap limit-1
-    # job): holed geometries need the hole-aware clip
-    # (jvm_clip.…_mp, which wants the full nested ring arrays).
-    any_holed = regions_prepared.filter(
-        F.col("is_valid") & F.col("has_holes")
-    ).limit(1).count() > 0
-    if any_holed:
+    # holed geometries need the hole-aware clip (jvm_clip.…_mp, which
+    # wants the full nested ring arrays)
+    if holed:
         # nested ring arrays, materialized dim-side for holed rows
         # only (the CASE arm keeps hole-free rows from paying the
         # second parse); invalid rows are Backgrounded before the clip
@@ -479,7 +521,7 @@ def build_labels(
                     F.col("g_maxx"), F.col("g_maxy")),
         ),
     )
-    if any_holed:
+    if holed:
         # holed rows: hole-aware S-H over the full ring arrays (largest
         # |shell|−Σ|holes| part selection, jvm_clip.…_mp)
         gen_mp = cached_column(
@@ -597,16 +639,14 @@ def _keyed(df: DataFrame) -> DataFrame:
 
 
 def _doc_tiles(rasters: DataFrame) -> DataFrame:
-    """tile_grid over keyed, doc-partitioned rasters.
+    """tile_grid over keyed rasters.
 
     The keys are parsed BEFORE the ~100× tile fan-out and carried
     through it (keep=), so the regexes run once per RASTER row instead
-    of once per tile. The doc partitioning is established before the
-    fan-out too: one cheap shuffle of the compact raster rows replaces
-    the post-fan-out shuffle of every media+label row — tile_grid's
-    Generate chain, the broadcast join and the clip all preserve
-    hashpartitioning, so assemble_docs' two aggregations and doc join
-    need no exchange."""
-    return tile_grid(
-        _keyed(rasters).repartition(F.col("doc_id")), keep=_JOIN_KEYS,
-    )
+    of once per tile. tile_grid doc-partitions the compact raster rows
+    before the fan-out (tiling.doc_partitioned): that one shuffle
+    replaces the post-fan-out shuffle of every media+label row —
+    tile_grid's Generate chain, the broadcast join and the clip all
+    preserve hashpartitioning, so assemble_docs' two aggregations and
+    doc join need no exchange."""
+    return tile_grid(_keyed(rasters), keep=_JOIN_KEYS)

@@ -11,6 +11,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _host_heap_gb() -> int:
+    """An eighth of physical memory, in whole GiB, within [1, 8]: a
+    heap the host can hold resident next to the Python workers."""
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return int(max(1, min(8, round(phys_gib / 8))))
+
+
 # Defaults chosen for the sandbox (local[32], 128 GiB) but expressed so
 # they transfer to a multi-executor cluster: AQE coalesces the 2×-core
 # shuffle partitioning down at runtime, and maxPartitionBytes keeps scan
@@ -42,12 +50,11 @@ _DEFAULTS = {
     "spark.shuffle.file.buffer": "1m",
     "spark.shuffle.unsafe.file.output.buffer": "1m",
     # local-mode single-JVM posture: the "driver" heap IS the whole
-    # executor pool's heap. At 16g the pipeline's big fan-out stage
-    # measured 74s GC in 237s of task time (31% — the HOF expression
-    # eval allocation churn), and the good-window pipeline floor
-    # dropped 3.9s → 3.1s at 48g. On a real cluster this key sizes
+    # executor pool's heap, sized to the host (_host_heap_gb). A fixed
+    # 48g (tuned on a 128 GiB box) was OOM-killed on a 15 GiB host once
+    # AlwaysPreTouch made it resident. On a real cluster this key sizes
     # only the driver; executors carry their own spark.executor.memory.
-    "spark.driver.memory": "48g",
+    "spark.driver.memory": f"{_host_heap_gb()}g",
     # Pre-fault the heap at JVM start: this host intermittently cannot
     # serve fresh-page faults at GC-copy rates (the bistable jvmalloc
     # control, NOTES.md r4 session 7 / r5 session 2) — with the heap

@@ -278,6 +278,7 @@ class TestPlanShape:
         labels = build_labels(tiles, prep, class_map(regions))
         plan = labels._jdf.queryExecution().executedPlan().toString()
         assert plan.count("ArrowEvalPython") == 0
+        assert "rings#" not in plan  # two-way CASE: no hole-aware arm
 
     def test_holed_regions_stay_jvm(self, spark):
         """A dim with a rectangle, a triangle and a polygon WITH a hole
@@ -318,6 +319,7 @@ class TestPlanShape:
         rows = labels.select("media_ref", "label").collect()
         plan = labels._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan  # holed rows clip JVM-side too
+        assert "rings#" in plan  # the hole-aware arm is planned
 
         # every region clips into some tile, and the result equals the
         # kernel-only labels

@@ -251,6 +251,73 @@ def test_tiles_from_docs_respects_doc_table(spark, tiny):
     assert n_pruned < n_full
 
 
+def _plan_jobs(spark, plan):
+    """(plan(), the number of Spark jobs launched while it ran)."""
+    sc = spark.sparkContext
+    group = f"plan-jobs-{id(plan)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = plan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def stored(spark, tiny, tmp_path_factory):
+    """The tiny inputs stored to parquet and read back, as a user's
+    tables arrive (the reads' own schema jobs run here)."""
+    rasters, regions = tiny
+    root = tmp_path_factory.mktemp("stored")
+    tables = {
+        "rasters": rasters, "regions": regions,
+        "docs": synth.synth_docs(spark, rasters),
+    }
+    for name, df in tables.items():
+        df.write.parquet(str(root / name))
+    return {name: spark.read.parquet(str(root / name)) for name in tables}
+
+
+class TestZeroJobPlanning:
+    """Planning an entry point launches one dim-side aggregate (two
+    jobs under AQE: its shuffle map stage and the result) and no
+    fact-side job; the doc partitioning is set once, with an explicit
+    count, and assemble_docs adds no doc_id exchange."""
+
+    def test_build_dataset(self, spark, stored, engine_out):
+        out, jobs = _plan_jobs(
+            spark, lambda: build_dataset(stored["rasters"], stored["regions"])
+        )
+        assert jobs <= 2
+        docs = out["docs_out"]
+        assert spans_from_engine(docs) == spans_from_engine(engine_out["docs_out"])
+        plan = docs._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        plan = plan.split("== Initial Plan ==")[0]
+        assert "RoundRobinPartitioning" not in plan
+        doc_exchanges = [
+            line for line in plan.splitlines()
+            if "Exchange hashpartitioning(doc_id" in line
+        ]
+        # one per branch of assemble_docs (media, labels), both the
+        # explicit doc_partitioned shuffle of the raster rows
+        assert len(doc_exchanges) == 2
+        assert all("REPARTITION_BY_NUM" in line for line in doc_exchanges)
+
+    def test_from_docs(self, spark, stored, engine_out):
+        from georip_spark.pipeline import from_docs
+
+        out, jobs = _plan_jobs(
+            spark,
+            lambda: from_docs(stored["docs"], stored["rasters"], stored["regions"]),
+        )
+        assert jobs <= 2
+        assert spans_from_engine(out["docs_out"]) == spans_from_engine(
+            engine_out["docs_out"]
+        )
+
+
 class TestRectFastPath:
     """Round-4 JVM fast path for rectangle clip+normalize: must be
     bit-identical to the Arrow kernel, tests/kernel_oracle.py (the e2e
