@@ -97,6 +97,28 @@ def prepare_regions(regions: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     return covered
 
 
+def _fan_out(df: DataFrame) -> DataFrame:
+    """``df`` spread round-robin over 4·par slices when it would run
+    fewer than 2·par tasks wide, decided without a Spark job.
+
+    Under AQE a plan with an exchange or a cached relation below it is
+    adaptive, and its partition count is known only once that stage
+    has run: reading it (``.rdd``) would run every shuffle map stage
+    below once more while planning. Such an input keeps the
+    partitioning its producer set — tile_grid and tiles_from_docs emit
+    4·par doc-hash slices (tiling.doc_partitioned), which assemble_docs
+    relies on. Any other plan (a file or local scan, filtered or
+    projected) only plans under ``.rdd``, so its split count is read.
+    4·par: see tiling.doc_partitioned."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < 2 * par:
+        return df.repartition(4 * par)
+    return df
+
+
 def spatial_join_tiles_regions(
     tiles: DataFrame,
     regions_prepared: DataFrame,
@@ -148,11 +170,10 @@ def spatial_join_tiles_regions(
     ]
     build = g.select(*keys, *carry, F.explode("cover").alias("cell"))
 
-    # A broadcast join keeps the probe side's input partitioning, so
-    # the tiles' producer sets it: tile_grid and tiles_from_docs both
-    # emit 4·par doc-hash slices (tiling.doc_partitioned). Reading the
-    # partition count here instead would run every shuffle map stage
-    # below the tiles once more while planning.
+    # A broadcast join keeps the probe side's input partitioning; a
+    # small file (or coalesced scan) would funnel the whole candidate
+    # stream — and the Python refinement — through one task.
+    tiles = _fan_out(tiles)
 
     # Probe-side cover as TWO explode(sequence) generators + packed-id
     # column math instead of explode(cover_bbox_expr(...)): a
@@ -458,17 +479,8 @@ def _knn_small_right(
             out["rn"] = (rank_all + 1).astype("int32")
             yield out
 
-    # fan out an under-parallel probe (a 2-split scan would run the
-    # whole stage 2-wide). The count is the one the physical plan
-    # declares before it runs — an explicit repartition's; 0 for a file
-    # or local scan, whose splits are known only at run time — so the
-    # check launches no job, where .rdd.getNumPartitions() ran every
-    # shuffle map stage below ``left`` once more.
-    par = spark.sparkContext.defaultParallelism
-    planned = left._jdf.queryExecution().sparkPlan().outputPartitioning()
-    if planned.numPartitions() < 2 * par:
-        left = left.repartition(4 * par)
-    return left.mapInPandas(topk, out_schema)
+    # a 2-split probe scan would run the whole stage 2-wide
+    return _fan_out(left).mapInPandas(topk, out_schema)
 
 
 def _knn_pass(

@@ -199,3 +199,29 @@ def test_auto_res_tracks_geometry_extent(spark):
     )
     from georip_spark.operators.joins import DEFAULT_RES
     assert auto_res(empty) == DEFAULT_RES
+
+
+def test_fan_out_launches_no_job(spark, tmp_path):
+    """The under-parallel guard of the kNN and spatial-join probes reads
+    a scan's split count, which only plans, and leaves an input with a
+    shuffle below it as its producer partitioned it: reading that count
+    would run the shuffle's map stage while planning."""
+    from pyspark.sql import functions as F
+
+    from georip_spark.operators.joins import _fan_out
+
+    path = str(tmp_path / "pts.parquet")
+    spark.createDataFrame(_pts(50, salt=3), "event_id long, cx double, cy double") \
+        .coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path).filter(F.col("event_id") % 2 == 0)
+    shuffled = scan.groupBy("event_id").agg(F.first("cx").alias("cx"))
+    sc = spark.sparkContext
+    sc.setJobGroup("fan-out", "fan-out")
+    try:
+        fanned, kept = _fan_out(scan), _fan_out(shuffled)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("fan-out")) == 0
+    assert fanned.rdd.getNumPartitions() == 4 * sc.defaultParallelism
+    assert kept is shuffled
