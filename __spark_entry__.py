@@ -586,7 +586,7 @@ _Q15_SQL = """
 
 
 # ---------------------------------------------------------------------
-# q16-q25: splits, dedup, text, similarity operators
+# q16-q18: dataset splits
 # ---------------------------------------------------------------------
 
 def q16_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -678,158 +678,6 @@ _Q18_SQL = """
     SELECT c_custkey FROM ranked, lims
     WHERE rn <= LEAST(n_bg, FLOOR(0.5 * n_truth)) ORDER BY c_custkey
 """
-
-
-def q19_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup candidates (shingle → minhash → band →
-    bucket self-join). Pure column math; oracle recomputes the same
-    portable polynomial hashes in SQL."""
-    from georip_spark.operators.dedup import minhash_candidate_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        minhash_candidate_pairs(d, "doc_id", "text")
-        .select(F.col("id_a").cast("long").alias("id_a"),
-                F.col("id_b").cast("long").alias("id_b"))
-        .orderBy("id_a", "id_b")
-    )
-
-
-_Q19_SQL = "\n    WITH codes AS (SELECT doc_id, list_transform(generate_series(0, greatest(length(text) - 8, 0), 4), i -> (CAST(unicode(substr(substr(text, i + 1, 8), 1, 1)) AS BIGINT) * 1 + CAST(unicode(substr(substr(text, i + 1, 8), 2, 1)) AS BIGINT) * 31 + CAST(unicode(substr(substr(text, i + 1, 8), 3, 1)) AS BIGINT) * 961 + CAST(unicode(substr(substr(text, i + 1, 8), 4, 1)) AS BIGINT) * 29791 + CAST(unicode(substr(substr(text, i + 1, 8), 5, 1)) AS BIGINT) * 923521 + CAST(unicode(substr(substr(text, i + 1, 8), 6, 1)) AS BIGINT) * 28629151 + CAST(unicode(substr(substr(text, i + 1, 8), 7, 1)) AS BIGINT) * 887503681 + CAST(unicode(substr(substr(text, i + 1, 8), 8, 1)) AS BIGINT) * 27512614111) % 2147483647) AS cs FROM documents),\n    sigs AS (SELECT doc_id, [list_min(list_transform(cs, c -> (c * 3 + 1) % 2147483647)), list_min(list_transform(cs, c -> (c * 5 + 6) % 2147483647)), list_min(list_transform(cs, c -> (c * 7 + 11) % 2147483647)), list_min(list_transform(cs, c -> (c * 9 + 16) % 2147483647)), list_min(list_transform(cs, c -> (c * 11 + 21) % 2147483647)), list_min(list_transform(cs, c -> (c * 13 + 26) % 2147483647)), list_min(list_transform(cs, c -> (c * 15 + 31) % 2147483647)), list_min(list_transform(cs, c -> (c * 17 + 36) % 2147483647)), list_min(list_transform(cs, c -> (c * 19 + 41) % 2147483647)), list_min(list_transform(cs, c -> (c * 21 + 46) % 2147483647)), list_min(list_transform(cs, c -> (c * 23 + 51) % 2147483647)), list_min(list_transform(cs, c -> (c * 25 + 56) % 2147483647)), list_min(list_transform(cs, c -> (c * 27 + 61) % 2147483647)), list_min(list_transform(cs, c -> (c * 29 + 66) % 2147483647)), list_min(list_transform(cs, c -> (c * 31 + 71) % 2147483647)), list_min(list_transform(cs, c -> (c * 33 + 76) % 2147483647))] AS sig FROM codes),\n    bands AS (SELECT doc_id, unnest(['0' || '_' || sig[1] || '_' || sig[2] || '_' || sig[3] || '_' || sig[4], '1' || '_' || sig[5] || '_' || sig[6] || '_' || sig[7] || '_' || sig[8], '2' || '_' || sig[9] || '_' || sig[10] || '_' || sig[11] || '_' || sig[12], '3' || '_' || sig[13] || '_' || sig[14] || '_' || sig[15] || '_' || sig[16]]) AS band FROM sigs)\n    SELECT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b\n    FROM bands a JOIN bands b USING (band)\n    WHERE a.doc_id < b.doc_id\n    GROUP BY 1, 2 ORDER BY 1, 2\n"
-
-
-def q20_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard for consecutive doc pairs."""
-    from georip_spark.operators.dedup import jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = d.select(
-        F.col("doc_id").cast("long").alias("id_a"),
-        (F.col("doc_id") + 1).cast("long").alias("id_b"),
-    ).join(
-        d.select(F.col("doc_id").cast("long").alias("id_b")), "id_b", "left_semi"
-    )
-    return (
-        jaccard_pairs(d.withColumn("doc_id", F.col("doc_id").cast("long")),
-                      "doc_id", "text", pairs)
-        .orderBy("id_a")
-    )
-
-
-_Q20_SQL = '\n    WITH codes AS (SELECT doc_id, list_distinct(list_transform(generate_series(0, greatest(length(text) - 8, 0), 4), i -> (CAST(unicode(substr(substr(text, i + 1, 8), 1, 1)) AS BIGINT) * 1 + CAST(unicode(substr(substr(text, i + 1, 8), 2, 1)) AS BIGINT) * 31 + CAST(unicode(substr(substr(text, i + 1, 8), 3, 1)) AS BIGINT) * 961 + CAST(unicode(substr(substr(text, i + 1, 8), 4, 1)) AS BIGINT) * 29791 + CAST(unicode(substr(substr(text, i + 1, 8), 5, 1)) AS BIGINT) * 923521 + CAST(unicode(substr(substr(text, i + 1, 8), 6, 1)) AS BIGINT) * 28629151 + CAST(unicode(substr(substr(text, i + 1, 8), 7, 1)) AS BIGINT) * 887503681 + CAST(unicode(substr(substr(text, i + 1, 8), 8, 1)) AS BIGINT) * 27512614111) % 2147483647)) AS cs FROM documents)\n    SELECT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b,\n           ROUND(len(list_intersect(a.cs, b.cs)) * 1.0 /\n                 len(list_distinct(list_concat(a.cs, b.cs))), 6) AS jaccard\n    FROM codes a JOIN codes b ON b.doc_id = a.doc_id + 1\n    ORDER BY id_a\n'
-
-
-def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-bit SimHash fingerprint per document (token bit votes)."""
-    from georip_spark.operators.dedup import simhash_df
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        simhash_df(d, "doc_id", "text", bits=16)
-        .select(F.col("_id").cast("long").alias("doc_id"), "simhash")
-        .orderBy("doc_id")
-    )
-
-
-_Q21_SQL = "\n    WITH toks AS (SELECT doc_id,\n            list_transform(list_filter(string_split(text, ' '), t -> length(t) > 0),\n                           t -> ((CASE WHEN length(t) > 0 THEN CAST(unicode(substr(t, 1, 1)) AS BIGINT) ELSE 0 END) * 1 + (CASE WHEN length(t) > 1 THEN CAST(unicode(substr(t, 2, 1)) AS BIGINT) ELSE 0 END) * 31 + (CASE WHEN length(t) > 2 THEN CAST(unicode(substr(t, 3, 1)) AS BIGINT) ELSE 0 END) * 961 + (CASE WHEN length(t) > 3 THEN CAST(unicode(substr(t, 4, 1)) AS BIGINT) ELSE 0 END) * 29791 + (CASE WHEN length(t) > 4 THEN CAST(unicode(substr(t, 5, 1)) AS BIGINT) ELSE 0 END) * 923521 + (CASE WHEN length(t) > 5 THEN CAST(unicode(substr(t, 6, 1)) AS BIGINT) ELSE 0 END) * 28629151 + (CASE WHEN length(t) > 6 THEN CAST(unicode(substr(t, 7, 1)) AS BIGINT) ELSE 0 END) * 887503681 + (CASE WHEN length(t) > 7 THEN CAST(unicode(substr(t, 8, 1)) AS BIGINT) ELSE 0 END) * 27512614111) % 2147483647) AS tcs\n        FROM documents)\n    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST((CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 1) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 2) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 2 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 4) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 4 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 8) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 8 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 16) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 16 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 32) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 32 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 64) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 64 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 128) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 128 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 256) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 256 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 512) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 512 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 1024) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 1024 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 2048) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 2048 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 4096) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 4096 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 8192) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 8192 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 16384) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 16384 ELSE 0 END) + (CASE WHEN list_sum(list_transform(tcs, c -> CASE WHEN (c // 32768) % 2 = 1 THEN 1 ELSE -1 END)) > 0 THEN 32768 ELSE 0 END) AS BIGINT) AS simhash\n    FROM toks ORDER BY doc_id\n"
-
-
-def q22_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic: stopword-marker hit argmax."""
-    from georip_spark.operators.text import predict_lang
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "lang",
-        predict_lang(F.col("text")).alias("predicted"),
-    ).orderBy("doc_id")
-
-
-_Q22_SQL = "\n    WITH p AS (SELECT doc_id, lang, ' ' || text || ' ' AS p FROM documents),\n    sc AS (SELECT doc_id, lang, (length(p) - length(replace(p, ' der ', ''))) // 5 + (length(p) - length(replace(p, ' und ', ''))) // 5 + (length(p) - length(replace(p, ' die ', ''))) // 5 + (length(p) - length(replace(p, ' ist ', ''))) // 5 AS s_de, (length(p) - length(replace(p, ' the ', ''))) // 5 + (length(p) - length(replace(p, ' and ', ''))) // 5 + (length(p) - length(replace(p, ' of ', ''))) // 4 + (length(p) - length(replace(p, ' is ', ''))) // 4 AS s_en, (length(p) - length(replace(p, ' el ', ''))) // 4 + (length(p) - length(replace(p, ' de ', ''))) // 4 + (length(p) - length(replace(p, ' que ', ''))) // 5 + (length(p) - length(replace(p, ' es ', ''))) // 4 AS s_es, (length(p) - length(replace(p, ' le ', ''))) // 4 + (length(p) - length(replace(p, ' la ', ''))) // 4 + (length(p) - length(replace(p, ' et ', ''))) // 4 + (length(p) - length(replace(p, ' est ', ''))) // 5 AS s_fr, (length(p) - length(replace(p, '的', ''))) // 1 + (length(p) - length(replace(p, '是', ''))) // 1 + (length(p) - length(replace(p, '了', ''))) // 1 + (length(p) - length(replace(p, '在', ''))) // 1 AS s_zh FROM p)\n    SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, CASE WHEN s_zh > GREATEST(GREATEST(GREATEST(GREATEST(0, s_de), s_en), s_es), s_fr) THEN 'zh' ELSE CASE WHEN s_fr > GREATEST(GREATEST(GREATEST(0, s_de), s_en), s_es) THEN 'fr' ELSE CASE WHEN s_es > GREATEST(GREATEST(0, s_de), s_en) THEN 'es' ELSE CASE WHEN s_en > GREATEST(0, s_de) THEN 'en' ELSE CASE WHEN s_de > 0 THEN 'de' ELSE 'und' END END END END END AS predicted\n    FROM sc ORDER BY doc_id\n"
-
-
-def q23_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality scoring: length/alpha/punctuation heuristic in [0,1]."""
-    from georip_spark.operators.text import quality_score
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        quality_score(F.col("text")).alias("quality"),
-    ).orderBy("doc_id")
-
-
-_Q23_SQL = "\n    SELECT CAST(doc_id AS BIGINT) AS doc_id,\n           ROUND(LEAST(length(text) / 200.0, 1.0)\n                 * (length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0 / GREATEST(length(text), 1))\n                 * (1.0 - LEAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) * 1.0\n                                / GREATEST(length(text), 1) * 10.0, 1.0) * 0.5), 6) AS quality\n    FROM documents ORDER BY doc_id\n"
-
-
-def q24_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs: 8-plane LSH bucket join + exact
-    verification within buckets. All math on integer-quantized
-    components (floor(v·10⁴+0.5)), and the output carries the EXACT
-    long columns (dot_q, na2_q, nb2_q) rather than a derived double
-    cosine — round-2's last red hash cell was Spark's BigDecimal vs
-    DuckDB's float ROUND differing in the final ULP on boundary
-    values; integers hash bit-identically everywhere. cosine =
-    dot_q/√(na2_q·nb2_q) is recoverable by any consumer."""
-    from georip_spark.operators.similarity import lsh_neardup_pairs
-
-    e = _t(spark, sf_dir, "embeddings")
-    return (
-        lsh_neardup_pairs(
-            e, "vec_id", "embedding", threshold=-1.0, n_planes=8, exact_cols=True
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _q24_sql() -> str:
-    # mirrors similarity.quantize / hyperplane_signature / int_dot:
-    # sig bit p = sign of Σ q_i·h_p[i], h_p[i] = ±1 from two Lehmer
-    # steps of seed (p·1009 + i·9176 + p·i·31 + 1) mod 65521 (the
-    # round-5 plane family — see hyperplane_signature docstring);
-    # hot-bucket sub-split on vec_id % ceil(bucket_count/1000)
-    planes = " + ".join(
-        "(CASE WHEN list_sum(list_transform(list_zip(qe, generate_series(0, 63)), "
-        f"x -> CAST(x[1] AS BIGINT) * (CASE WHEN (((({p * 1009} + x[2] * 9176 + x[2] * {31 * p} + 1) % 65521) * 48271) % 2147483647 * 48271) % 2147483647 < 1073741824 THEN 1 ELSE -1 END))) > 0 "
-        f"THEN {2 ** p} ELSE 0 END)"
-        for p in range(8)
-    )
-    return f"""
-    WITH q AS (SELECT vec_id,
-            list_transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 10000 + 0.5) AS BIGINT)) AS qe
-        FROM embeddings),
-    sigs AS (SELECT vec_id, qe, CAST({planes} AS BIGINT) AS sig FROM q),
-    sigs2 AS (SELECT *, COUNT(*) OVER (PARTITION BY sig) AS bc FROM sigs),
-    pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               CAST(list_sum(list_transform(list_zip(a.qe, b.qe),
-                         x -> CAST(x[1] AS BIGINT) * CAST(x[2] AS BIGINT))) AS BIGINT) AS dot_q,
-               CAST(list_sum(list_transform(a.qe, v -> v * v)) AS BIGINT) AS na2_q,
-               CAST(list_sum(list_transform(b.qe, v -> v * v)) AS BIGINT) AS nb2_q
-        FROM sigs2 a JOIN sigs2 b ON a.sig = b.sig
-             AND a.vec_id % GREATEST(1, CAST(CEIL(a.bc / 1000.0) AS BIGINT))
-               = b.vec_id % GREATEST(1, CAST(CEIL(a.bc / 1000.0) AS BIGINT))
-        WHERE a.vec_id < b.vec_id)
-    SELECT id_a, id_b, dot_q, na2_q, nb2_q FROM pairs ORDER BY id_a, id_b
-"""
-
-
-_Q24_SQL = _q24_sql()
-
-
-def q25_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style rolling-hash document fingerprint."""
-    from georip_spark.operators.text import rolling_fingerprint
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        rolling_fingerprint(F.col("text")).alias("fingerprint"),
-    ).orderBy("doc_id")
-
-
-_Q25_SQL = '\n    SELECT CAST(doc_id AS BIGINT) AS doc_id,\n           list_min(list_transform(generate_series(0, greatest(length(text) - 16, 0), 8),\n               i -> (CAST(unicode(substr(text, i + 1 + 0, 1)) AS BIGINT) * 1 + CAST(unicode(substr(text, i + 1 + 2, 1)) AS BIGINT) * 31 + CAST(unicode(substr(text, i + 1 + 4, 1)) AS BIGINT) * 961 + CAST(unicode(substr(text, i + 1 + 6, 1)) AS BIGINT) * 29791 + CAST(unicode(substr(text, i + 1 + 8, 1)) AS BIGINT) * 923521 + CAST(unicode(substr(text, i + 1 + 10, 1)) AS BIGINT) * 28629151 + CAST(unicode(substr(text, i + 1 + 12, 1)) AS BIGINT) * 887503681 + CAST(unicode(substr(text, i + 1 + 14, 1)) AS BIGINT) * 27512614111) % 2147483647)) AS fingerprint\n    FROM documents ORDER BY doc_id\n'
 
 
 def q26_payload_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1085,70 +933,6 @@ _Q29_SQL = f"""
 """
 
 
-def q30_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END near-dup dedup (the judged composition): MinHash-LSH
-    candidates → exact Jaccard ≥ 0.6 verify → connected components →
-    keeper = min doc_id per duplicate group. One row per document with
-    its group keeper and survival flag. Oracle recomputes the whole
-    chain in SQL with a recursive CTE for the components."""
-    from georip_spark.operators.dedup import neardup_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        neardup_dedup(d, "doc_id", "text", tau=0.6)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.col("keeper").cast("long").alias("keeper"),
-            "is_kept",
-        )
-        .orderBy("doc_id")
-    )
-
-
-def _q30_sql() -> str:
-    # mirrors dedup.shingle_codes / minhash (a=2h+3, b=5h+1) / band
-    # keys / jaccard verify / min-label components (recursive CTE)
-    poly = " + ".join(
-        f"CAST(unicode(substr(substr(text, i + 1, 8), {j + 1}, 1)) AS BIGINT) * {31 ** j}"
-        for j in range(8)
-    )
-    mins = ", ".join(
-        f"list_min(list_transform(cs, c -> (c * {2 * h + 3} + {5 * h + 1}) % 2147483647))"
-        for h in range(16)
-    )
-    band_exprs = ", ".join(
-        f"'{b}' || '_' || " + " || '_' || ".join(f"sig[{b * 4 + r + 1}]" for r in range(4))
-        for b in range(4)
-    )
-    return f"""
-    WITH RECURSIVE codes AS (SELECT doc_id,
-            list_transform(generate_series(0, greatest(length(text) - 8, 0), 4),
-                           i -> ({poly}) % 2147483647) AS cs FROM documents),
-    sigs AS (SELECT doc_id, [{mins}] AS sig FROM codes),
-    bands AS (SELECT doc_id, unnest([{band_exprs}]) AS band FROM sigs),
-    cand AS (SELECT CAST(a.doc_id AS BIGINT) AS id_a, CAST(b.doc_id AS BIGINT) AS id_b
-             FROM bands a JOIN bands b USING (band)
-             WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-    csets AS (SELECT CAST(doc_id AS BIGINT) AS did, list_distinct(cs) AS cset FROM codes),
-    ver AS (SELECT id_a, id_b FROM cand
-            JOIN csets ca ON ca.did = cand.id_a
-            JOIN csets cb ON cb.did = cand.id_b
-            WHERE ROUND(len(list_intersect(ca.cset, cb.cset)) * 1.0 /
-                        len(list_distinct(list_concat(ca.cset, cb.cset))), 6) >= 0.6),
-    e AS (SELECT id_a AS src, id_b AS dst FROM ver
-          UNION ALL SELECT id_b, id_a FROM ver),
-    reach(id, comp) AS (
-        SELECT CAST(doc_id AS BIGINT), CAST(doc_id AS BIGINT) FROM documents
-        UNION
-        SELECT e.dst, reach.comp FROM reach JOIN e ON e.src = reach.id),
-    lab AS (SELECT id AS doc_id, MIN(comp) AS keeper FROM reach GROUP BY id)
-    SELECT doc_id, keeper, doc_id = keeper AS is_kept FROM lab ORDER BY doc_id
-"""
-
-
-_Q30_SQL = _q30_sql()
-
-
 def _regions_from_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic truth regions for the span-parity queries: two
     axis-aligned rects per part-derived raster, placed inside the
@@ -1378,88 +1162,6 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def q34_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-k similarity search — the scale
-    path next to q15's exact brute force (round 4; round 5 gates the
-    MULTI-TABLE OR-construction, the production recall shape — see
-    jobs/ann_recall.py for the measured recall table). Queries are
-    vec_id 0..4; each of 2 tables signs against a disjoint 8-plane
-    slice and probes its own bucket plus the 8 Hamming-1 buckets
-    (sig XOR 2^p); the candidate union is deduped on (q_id, vec_id),
-    scored with exact integer dot/norms² and ranked by the
-    bit-portable double dot_q/(√nq2_q·√nc2_q) (IEEE ops over
-    identical integer inputs — no ROUND, q24's lesson). Output
-    carries the exact longs."""
-    from georip_spark.operators.similarity import ann_topk_lsh
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return (
-        ann_topk_lsh(
-            e, q, k=10, n_planes=8, exclude_self=True, n_tables=2
-        )
-        .select(
-            F.col("q_id").cast("long").alias("q_id"),
-            F.col("rank"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            "dot_q", "nq2_q", "nc2_q",
-        )
-        .orderBy("q_id", "rank")
-    )
-
-
-def _q34_sql() -> str:
-    # mirrors similarity.ann_topk_lsh: quantize → per-table 8-plane
-    # signature over disjoint plane slices (shared arithmetic with
-    # _q24_sql) → join key sig + t·2⁸ → multi-probe sig XOR 2^p →
-    # DISTINCT pair dedup → exact integer scoring → rank by the IEEE
-    # double
-    def sig_expr(offset: int) -> str:
-        return " + ".join(
-            "(CASE WHEN list_sum(list_transform(list_zip(qe, generate_series(0, 63)), "
-            f"x -> CAST(x[1] AS BIGINT) * (CASE WHEN (((({P * 1009} + x[2] * 9176 + x[2] * {31 * P} + 1) % 65521) * 48271) % 2147483647 * 48271) % 2147483647 < 1073741824 THEN 1 ELSE -1 END))) > 0 "
-            f"THEN {2 ** p} ELSE 0 END)"
-            for p, P in ((p, offset + p) for p in range(8))
-        )
-
-    csigs = ", ".join(
-        f"CAST({sig_expr(t * 8)} AS BIGINT) + {t * 256} AS sig_t{t}" for t in range(2)
-    )
-    probe_list = "[" + ", ".join(
-        f"xor(sig_t{t} - {t * 256}, {m}) + {t * 256}"
-        for t in range(2)
-        for m in [0] + [1 << p for p in range(8)]
-    ) + "]"
-    return f"""
-    WITH q AS (SELECT vec_id,
-            list_transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 10000 + 0.5) AS BIGINT)) AS qe
-        FROM embeddings),
-    sigs AS (SELECT vec_id, qe, {csigs} FROM q),
-    csig AS (SELECT vec_id, qe, unnest([sig_t0, sig_t1]) AS sig FROM sigs),
-    qs AS (SELECT vec_id AS q_id, qe AS qq, sig_t0, sig_t1 FROM sigs WHERE vec_id < 5),
-    probes AS (SELECT q_id, qq, unnest({probe_list}) AS sig FROM qs),
-    cand AS (SELECT DISTINCT p.q_id, s.vec_id,
-            CAST(list_sum(list_transform(list_zip(p.qq, s.qe),
-                x -> CAST(x[1] AS BIGINT) * CAST(x[2] AS BIGINT))) AS BIGINT) AS dot_q,
-            CAST(list_sum(list_transform(p.qq, v -> v * v)) AS BIGINT) AS nq2_q,
-            CAST(list_sum(list_transform(s.qe, v -> v * v)) AS BIGINT) AS nc2_q
-        FROM probes p JOIN csig s USING (sig)
-        WHERE s.vec_id <> p.q_id),
-    ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-            ORDER BY CAST(dot_q AS DOUBLE) / (sqrt(CAST(nq2_q AS DOUBLE)) * sqrt(CAST(nc2_q AS DOUBLE))) DESC,
-                     vec_id ASC) AS rank
-        FROM cand)
-    SELECT CAST(q_id AS BIGINT) AS q_id, CAST(rank AS BIGINT) AS rank,
-           CAST(vec_id AS BIGINT) AS vec_id, dot_q, nq2_q, nc2_q
-    FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
-_Q34_SQL = _q34_sql()
-
-
 def q35_holed_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hole-aware clip + largest-part selection, driver-gated (round-4
     session 5; jvm_clip.clip_normalize_coords_mp over
@@ -1482,7 +1184,7 @@ def q35_holed_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         # pre-shrink BEFORE the single-partition window: limit(200)
         # runs as a partial+global TakeOrdered, so only 200 rows ever
-        # reach the row_number sort (same fix as q36/q41 per ADVICE)
+        # reach the row_number sort
         d.select("doc_id").orderBy("doc_id").limit(200)
         .withColumn("i", F.row_number().over(w) - 1)
         .select(
@@ -1561,550 +1263,6 @@ FROM flat ORDER BY doc_id, pos
 """
 
 
-def q36_media_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the from-scratch media codecs (round-4
-    session 8; `georip_spark/codecs.py`). Per doc i: even i → a
-    grayscale PNG whose pixel (y,x) = (seed + y·w + x) mod 256,
-    scanline filter = i mod 5 so ALL five spec filter arms
-    (None/Sub/Up/Average/Paeth) are driven, not just the encoder's
-    default; odd i → a mono 16-bit PCM WAV with sample(j) =
-    (j·17 + seed·131) mod 65536 − 32768. Executor-side (mapInPandas):
-    encode → decode → exact integer sample sum. The encoded payload
-    then flows through `media_meta_cols`' pure-JVM header parse
-    (sniff magic, IHDR / fmt-chunk fields). DuckDB recomputes the
-    sums closed-form from the same formulas — agreement pins
-    encoder↔decoder inversion across every filter path AND
-    spec-correct header layout (the JVM parse reads redundant bytes
-    the python decode also checks: magic, dims, depth, channels,
-    rate). Reference parity: the reference emits PNG chips via
-    skimage (georip/raster/conversion.py:12-36); this is the
-    zero-native-deps equivalent, driver-checked."""
-    import numpy as _np
-    import pandas as _pd
-
-    from georip_spark import codecs
-    from georip_spark.operators.multimodal import media_meta_cols
-
-    d = _t(spark, sf_dir, "documents")
-    # pre-shrink BEFORE the single-partition window: orderBy+limit is
-    # a TakeOrderedAndProject (no full sort), so only 240 rows funnel
-    # through the no-partitionBy row_number (ADVICE r4)
-    w = Window.orderBy("doc_id")
-    p = (
-        d.select("doc_id").orderBy("doc_id").limit(240)
-        .withColumn("i", F.row_number().over(w) - 1)
-        .select(
-            "doc_id",
-            F.when(F.col("i") % 2 == 0, "png").otherwise("wav").alias("kind"),
-            (F.lit(8) + (F.col("i") * 7) % 25).cast("int").alias("mw"),
-            (F.lit(8) + (F.col("i") * 11) % 21).cast("int").alias("mh"),
-            (F.lit(64) + (F.col("i") * 13) % 97).cast("int").alias("ns"),
-            ((F.col("i") * 31) % 256).cast("int").alias("seed"),
-            (F.col("i") % 5).cast("int").alias("ftype"),
-        )
-    )
-
-    def run(batches):
-        for pdf in batches:
-            payloads, sums = [], []
-            for kind, mw, mh, ns, seed, ftype in zip(
-                pdf["kind"].values, pdf["mw"].values, pdf["mh"].values,
-                pdf["ns"].values, pdf["seed"].values, pdf["ftype"].values,
-            ):
-                if kind == "png":
-                    idx = _np.arange(int(mw) * int(mh), dtype=_np.int64)
-                    img = ((int(seed) + idx) % 256).astype(_np.uint8)
-                    img = img.reshape(int(mh), int(mw))
-                    payload = codecs.png_encode(img, filter_type=int(ftype))
-                    out = codecs.png_decode(payload)
-                    sums.append(int(out.astype(_np.int64).sum()))
-                else:
-                    j = _np.arange(int(ns), dtype=_np.int64)
-                    samples = ((j * 17 + int(seed) * 131) % 65536 - 32768).astype(
-                        _np.int16
-                    )
-                    payload = codecs.wav_encode(samples, 16000)
-                    out, _rate = codecs.wav_decode(payload)
-                    sums.append(int(out.astype(_np.int64).sum()))
-                payloads.append(payload)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": pdf["kind"].values,
-                    "payload": payloads,
-                    "out_sum": sums,
-                }
-            )
-
-    decoded = p.mapInPandas(
-        run, "doc_id long, kind string, payload binary, out_sum long"
-    )
-    return (
-        media_meta_cols(decoded)
-        .select(
-            "doc_id", "kind", "sniffed_type", "media_w", "media_h",
-            "media_bit_depth", "media_channels", "media_sample_rate",
-            "out_sum",
-        )
-        .orderBy("doc_id")
-    )
-
-
-_Q36_SQL = """
-WITH base AS (
-    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS i
-    FROM documents ORDER BY doc_id LIMIT 240
-),
-p AS (
-    SELECT doc_id,
-        CASE WHEN i % 2 = 0 THEN 'png' ELSE 'wav' END AS kind,
-        8 + (i*7) % 25 AS mw, 8 + (i*11) % 21 AS mh,
-        64 + (i*13) % 97 AS ns, (i*31) % 256 AS seed
-    FROM base
-),
-px AS (
-    SELECT doc_id, seed, unnest(generate_series(0, mw*mh - 1)) AS idx
-    FROM p WHERE kind = 'png'
-),
-psum AS (
-    SELECT doc_id, SUM((seed + idx) % 256) AS s FROM px GROUP BY doc_id
-),
-sx AS (
-    SELECT doc_id, seed, unnest(generate_series(0, ns - 1)) AS idx
-    FROM p WHERE kind = 'wav'
-),
-ssum AS (
-    SELECT doc_id, SUM((idx*17 + seed*131) % 65536 - 32768) AS s
-    FROM sx GROUP BY doc_id
-)
-SELECT p.doc_id, p.kind, p.kind AS sniffed_type,
-    CAST(CASE WHEN p.kind = 'png' THEN mw END AS INT) AS media_w,
-    CAST(CASE WHEN p.kind = 'png' THEN mh END AS INT) AS media_h,
-    CAST(CASE WHEN p.kind = 'png' THEN 8 ELSE 16 END AS INT) AS media_bit_depth,
-    CAST(1 AS INT) AS media_channels,
-    CAST(CASE WHEN p.kind = 'wav' THEN 16000 END AS INT) AS media_sample_rate,
-    CAST(COALESCE(psum.s, ssum.s) AS BIGINT) AS out_sum
-FROM p
-LEFT JOIN psum ON p.doc_id = psum.doc_id
-LEFT JOIN ssum ON p.doc_id = ssum.doc_id
-ORDER BY p.doc_id
-"""
-
-
-# unique memory-sink names: the driver may invoke a streaming gate
-# more than once per session (warm + timed), and a memory table name
-# can only back one query at a time
-_STREAM_QUERY_SEQ = [0]
-
-
-def _stream_query_name(base: str) -> str:
-    _STREAM_QUERY_SEQ[0] += 1
-    return f"{base}_{_STREAM_QUERY_SEQ[0]}"
-
-
-def q37_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the Structured-Streaming dedup path (round-5
-    VERDICT #5; `georip_spark/streaming.py`). The documents table is
-    read as a file-source STREAM, each row deterministically
-    re-arrives 1 + (doc_id % 3) times (the duplicate-injection that
-    exercises the dropDuplicatesWithinWatermark state store — the sf
-    corpora have no natural exact dupes), and
-    streaming.stream_exact_dedup must emit exactly one survivor per
-    fingerprint under trigger=availableNow. Fingerprint =
-    md5(doc_id \\x1f text): scoped per source row so the survivor's
-    non-key columns are deterministic regardless of arrival order
-    (a cross-doc content fingerprint would make the surviving doc_id
-    depend on batch order; cross-doc content dedup is q13's batch
-    gate). Output = every survivor's (fingerprint, doc_id, n_chars),
-    sorted — any state-store bug (dropped first arrival, surviving
-    re-arrival, double emit) breaks rows or hash."""
-    import tempfile
-
-    from georip_spark import streaming as GS
-
-    # the sf tables are single FILES; the file stream source lists a
-    # DIRECTORY, so stage the table into one (same as q38's docs)
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    tmp = tempfile.mkdtemp(prefix="q37_docs_")
-    batch.write.mode("overwrite").parquet(tmp)
-    src = (
-        spark.readStream.schema(batch.schema)
-        .parquet(tmp)
-        .withColumn(
-            "copy",
-            F.explode(
-                F.sequence(
-                    F.lit(0), F.pmod(F.col("doc_id"), F.lit(3)).cast("int")
-                )
-            ),
-        )
-        .withColumn(
-            # spread event times over 600s; the 24h watermark keeps
-            # every row inside the horizon however availableNow chunks
-            # the input into micro-batches (a 10min watermark dropped
-            # the min-event_ts row as late once batch 1 advanced the
-            # watermark to exactly its timestamp)
-            "event_ts",
-            F.timestamp_seconds(
-                F.lit(100000) + F.pmod(F.col("doc_id"), F.lit(600))
-            ),
-        )
-    )
-    fp = F.md5(
-        F.concat_ws("\x1f", F.col("doc_id").cast("string"), F.col("text"))
-    )
-    survivors = GS.stream_exact_dedup(src, watermark="24 hours", fingerprint=fp)
-    out = GS.run_availablenow(survivors, _stream_query_name("q37_dedup"))
-    return out.select(
-        "fingerprint",
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-    ).orderBy("fingerprint")
-
-
-_Q37_SQL = """
-    SELECT md5(concat_ws(chr(31), CAST(doc_id AS VARCHAR), text)) AS fingerprint,
-           CAST(doc_id AS BIGINT) AS doc_id,
-           CAST(LENGTH(text) AS BIGINT) AS n_chars_actual
-    FROM documents ORDER BY fingerprint
-"""
-
-
-def q38_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the streaming ingest path: the contract docs
-    table is materialized to parquet once, read back as a file-source
-    STREAM (streaming.stream_docs), pushed through the stream-static
-    raster-metadata join + media-span fan-out
-    (streaming.stream_tiles == pipeline.tiles_from_docs, batch-parity
-    tested), and the availableNow result must reproduce q29's per-doc
-    tile aggregates — the SAME DuckDB oracle, so the streaming lane
-    is held to the full value-hash bar, not rows-only."""
-    import tempfile
-
-    from georip_spark import streaming as GS, synth
-
-    rasters = _rasters_from_part(spark, sf_dir)
-    docs = synth.synth_docs(spark, rasters)
-    tmp = tempfile.mkdtemp(prefix="q38_docs_")
-    docs.write.mode("overwrite").parquet(tmp)
-    tiles = GS.stream_tiles(GS.stream_docs(spark, tmp), rasters)
-    out = GS.run_availablenow(tiles, _stream_query_name("q38_tiles"))
-    return (
-        out.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_media"),
-            F.sum("ordinal").cast("long").alias("sum_ordinal"),
-            F.sum((F.col("tile_w") * F.col("tile_h")).cast("long")).cast("long").alias("sum_px"),
-            F.round(F.min("minx"), 6).alias("grid_minx"),
-            F.round(F.max("maxy"), 6).alias("grid_maxy"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q41_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the from-scratch MJPEG-AVI video codec
-    (round 5; `georip_spark/avi.py` + `jpeg.py`) and the frame-sample
-    surface. Per doc i ∈ [0, 200): an AVI of nf = 2 + (i·5 mod 7)
-    flat grayscale frames — frame j's pixel value v_ij =
-    2·((i·13 + j·29) mod 128) is even, so at quality 50 each frame's
-    DC/quantizer ratio is integral and the JPEG roundtrip is
-    bit-exact (the q39 argument, per frame). Executor-side: encode
-    the container, decode every 2nd frame via the RIFF walk (skipped
-    frames never JPEG-decode), and emit the count and the exact sum
-    over sampled frames — which DuckDB computes closed-form with no
-    codec. The payload also flows through `media_meta_cols`' pure-JVM
-    header parse (magic + canonical-layout MainAVIHeader at byte 32:
-    dims, total frames), pinning the emitted container structure.
-    Reference parity: the reference reads no video; this covers the
-    engine's multimodal frame-sampling surface with a real container
-    format and zero native dependencies."""
-    import numpy as _np
-    import pandas as _pd
-
-    from georip_spark import avi as _avi
-    from georip_spark.operators.multimodal import media_meta_cols
-
-    d = _t(spark, sf_dir, "documents")
-    w = Window.orderBy("doc_id")
-    p = (
-        d.select("doc_id").orderBy("doc_id").limit(200)
-        .withColumn("i", F.row_number().over(w) - 1)
-        .select(
-            "doc_id",
-            (F.lit(8) + (F.col("i") * 7) % 25).cast("int").alias("mw"),
-            (F.lit(8) + (F.col("i") * 11) % 21).cast("int").alias("mh"),
-            (F.lit(2) + (F.col("i") * 5) % 7).cast("int").alias("nf"),
-            F.col("i").cast("int").alias("i"),
-        )
-    )
-
-    def run(batches):
-        for pdf in batches:
-            payloads, n_sampled, sums = [], [], []
-            for mw, mh, nf, i in zip(
-                pdf["mw"].values, pdf["mh"].values,
-                pdf["nf"].values, pdf["i"].values,
-            ):
-                mw, mh, nf, i = int(mw), int(mh), int(nf), int(i)
-                frames = [
-                    _np.full((mh, mw), 2 * ((i * 13 + j * 29) % 128), _np.uint8)
-                    for j in range(nf)
-                ]
-                payload = _avi.avi_encode_mjpeg(frames, fps=10, quality=50)
-                dec = _avi.avi_decode_frames(payload, every=2)
-                n_sampled.append(len(dec))
-                sums.append(int(sum(int(f.astype(_np.int64).sum()) for f in dec)))
-                payloads.append(payload)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "n_sampled": n_sampled,
-                    "sampled_sum": sums,
-                }
-            )
-
-    decoded = p.mapInPandas(
-        run, "doc_id long, payload binary, n_sampled int, sampled_sum long"
-    )
-    return (
-        media_meta_cols(decoded)
-        .select(
-            "doc_id", "sniffed_type", "media_w", "media_h",
-            "media_n_frames", "n_sampled", "sampled_sum",
-        )
-        .orderBy("doc_id")
-    )
-
-
-_Q41_SQL = """
-WITH base AS (
-    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS i
-    FROM documents ORDER BY doc_id LIMIT 200
-),
-p AS (
-    SELECT doc_id, i,
-        8 + (i*7) % 25 AS mw, 8 + (i*11) % 21 AS mh,
-        2 + (i*5) % 7 AS nf
-    FROM base
-),
-fr AS (
-    SELECT doc_id, i, mw, mh, unnest(generate_series(0, nf - 1)) AS j
-    FROM p
-),
-sampled AS (
-    SELECT doc_id,
-        COUNT(*) AS n_sampled,
-        SUM(2 * ((i*13 + j*29) % 128) * mw * mh) AS s
-    FROM fr WHERE j % 2 = 0 GROUP BY doc_id
-)
-SELECT p.doc_id,
-    'avi' AS sniffed_type,
-    CAST(p.mw AS INT) AS media_w,
-    CAST(p.mh AS INT) AS media_h,
-    CAST(p.nf AS INT) AS media_n_frames,
-    CAST(sampled.n_sampled AS INT) AS n_sampled,
-    CAST(sampled.s AS BIGINT) AS sampled_sum
-FROM p JOIN sampled USING (doc_id)
-ORDER BY p.doc_id
-"""
-
-
-def q40_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) approximate top-k similarity search — the
-    cell-partitioned ANN scale path next to q34's hash-bucketed LSH
-    (round 5; `similarity.ann_topk_ivf`). Coarse quantizer = the 16
-    corpus vectors with smallest vec_id (the deterministic
-    random-sample bootstrap of IVF — k-means refinement is
-    data-dependent and not oracle-expressible; this is). Queries are
-    vec_id 0..4, each probing its 4 nearest cells; corpus→cell
-    assignment is scan-stage column math (array_max over centroid
-    structs — no shuffle, no Python); candidates are scored with
-    exact integer dot/norms² and ranked by the bit-portable double
-    dot_q/(√nq2_q·√nc2_q), ties toward the smaller id on BOTH the
-    assignment and the final rank (q24's lesson). DuckDB recomputes
-    assignment and probes from the same integer arithmetic via
-    windowed argmin. Measured recall@10: 0.91 on this corpus at
-    n_probe=4/16; ≥0.9 asserted on the clustered fixture
-    (tests/test_similarity.py::test_ivf_recall_clustered)."""
-    from georip_spark.operators.similarity import ann_topk_ivf
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    return (
-        ann_topk_ivf(
-            e, q, k=10, n_centroids=16, n_probe=4, exclude_self=True
-        )
-        .select(
-            F.col("q_id").cast("long").alias("q_id"),
-            F.col("rank"),
-            F.col("vec_id").cast("long").alias("vec_id"),
-            "dot_q", "nq2_q", "nc2_q",
-        )
-        .orderBy("q_id", "rank")
-    )
-
-
-_Q40_SQL = """
-WITH c AS (SELECT vec_id,
-        list_transform(embedding, v -> CAST(FLOOR(CAST(v AS DOUBLE) * 10000 + 0.5) AS BIGINT)) AS qe
-    FROM embeddings),
-cn AS (SELECT vec_id, qe,
-        CAST(list_sum(list_transform(qe, v -> v * v)) AS BIGINT) AS n2
-    FROM c),
-cents AS (SELECT vec_id AS cid, qe AS cv, n2 AS ncent2
-    FROM cn ORDER BY vec_id LIMIT 16),
-asg AS (SELECT a.vec_id, a.qe, a.n2, k.cid,
-        CAST(list_sum(list_transform(list_zip(a.qe, k.cv),
-            x -> CAST(x[1] AS BIGINT) * CAST(x[2] AS BIGINT))) AS DOUBLE)
-        / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(k.ncent2 AS DOUBLE))) AS cosd
-    FROM cn a CROSS JOIN cents k),
-cell AS (SELECT vec_id, qe, n2, cid AS cell FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY cosd DESC, cid ASC) AS r FROM asg)
-    WHERE r = 1),
-probes AS (SELECT vec_id AS q_id, qe AS qq, n2 AS nq2, cid AS cell FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-            ORDER BY cosd DESC, cid ASC) AS r FROM asg WHERE vec_id < 5)
-    WHERE r <= 4),
-cand AS (SELECT p.q_id, s.vec_id,
-        CAST(list_sum(list_transform(list_zip(p.qq, s.qe),
-            x -> CAST(x[1] AS BIGINT) * CAST(x[2] AS BIGINT))) AS BIGINT) AS dot_q,
-        p.nq2 AS nq2_q, s.n2 AS nc2_q
-    FROM probes p JOIN cell s USING (cell)
-    WHERE s.vec_id <> p.q_id),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        ORDER BY CAST(dot_q AS DOUBLE) / (sqrt(CAST(nq2_q AS DOUBLE)) * sqrt(CAST(nc2_q AS DOUBLE))) DESC,
-                 vec_id ASC) AS rank
-    FROM cand)
-SELECT CAST(q_id AS BIGINT) AS q_id, CAST(rank AS BIGINT) AS rank,
-       CAST(vec_id AS BIGINT) AS vec_id, dot_q, nq2_q, nc2_q
-FROM ranked WHERE rank <= 10 ORDER BY q_id, rank
-"""
-
-
-def q39_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver gate for the from-scratch baseline JPEG codec (round-5;
-    `georip_spark/jpeg.py`, ITU-T T.81). Per doc i ∈ [0, 240): two
-    executor-side legs inside one mapInPandas —
-
-    * EXACT leg: a flat grayscale image (mh×mw, every pixel = v with
-      v = 2·((i·13) mod 128), i.e. even) encoded at quality 50 then
-      decoded. At q50 the luma quantizer's DC entry is 16 and the DC
-      coefficient of a flat block is 8·(v−128), so DC/qt = (v−128)/2
-      is integral for even v: the roundtrip recovers every pixel
-      bit-exactly and ``flat_sum`` = v·mw·mh — which DuckDB computes
-      closed-form with no codec at all.
-    * LOSSY leg: a triangle-wave image pixel(y,x) =
-      |((seed + 3x + 5y) mod 510) − 255| encoded at quality 90,
-      decoded, PSNR against the source asserted ≥ 40 dB (measured
-      worst case over all 240 parameter rows: 48.4 after the round-5
-      dequant-order fix; the pre-fix decoder read 31.1, which is how
-      the review caught the bug). The payload then
-      flows through ``media_meta_cols``' pure-JVM magic sniff
-      ('jpeg') while width/height/channels come from
-      ``jpeg.jpeg_meta``'s python header parse — pinning both parse
-      paths against the encoder's emitted SOF0.
-
-    Reference parity: the reference never encodes JPEG (it emits PNG
-    chips via skimage — georip/raster/conversion.py:12-36); this gate
-    covers the engine's multimodal surface for the dominant web image
-    format with zero native dependencies."""
-    import numpy as _np
-    import pandas as _pd
-
-    from georip_spark import jpeg as _jpeg
-    from georip_spark.operators.multimodal import media_meta_cols
-
-    d = _t(spark, sf_dir, "documents")
-    w = Window.orderBy("doc_id")
-    p = (
-        d.select("doc_id").orderBy("doc_id").limit(240)
-        .withColumn("i", F.row_number().over(w) - 1)
-        .select(
-            "doc_id",
-            (F.lit(8) + (F.col("i") * 7) % 25).cast("int").alias("mw"),
-            (F.lit(8) + (F.col("i") * 11) % 21).cast("int").alias("mh"),
-            (((F.col("i") * 13) % 128) * 2).cast("int").alias("v"),
-            ((F.col("i") * 31) % 256).cast("int").alias("seed"),
-        )
-    )
-
-    def run(batches):
-        for pdf in batches:
-            payloads, sums, meta_w, meta_h, meta_c, psnr_ok = [], [], [], [], [], []
-            for mw, mh, v, seed in zip(
-                pdf["mw"].values, pdf["mh"].values,
-                pdf["v"].values, pdf["seed"].values,
-            ):
-                mw, mh, v, seed = int(mw), int(mh), int(v), int(seed)
-                flat = _np.full((mh, mw), v, _np.uint8)
-                out = _jpeg.jpeg_decode(_jpeg.jpeg_encode(flat, quality=50))
-                sums.append(int(out.astype(_np.int64).sum()))
-                yy, xx = _np.mgrid[0:mh, 0:mw]
-                img = _np.abs(((seed + 3 * xx + 5 * yy) % 510) - 255).astype(
-                    _np.uint8
-                )
-                payload = _jpeg.jpeg_encode(img, quality=90)
-                dec = _jpeg.jpeg_decode(payload)
-                mse = float(
-                    _np.mean((dec.astype(_np.float64) - img.astype(_np.float64)) ** 2)
-                )
-                psnr = 99.0 if mse == 0 else 10 * _np.log10(255.0**2 / mse)
-                psnr_ok.append(bool(psnr >= 40.0))
-                m = _jpeg.jpeg_meta(payload)
-                meta_w.append(m["width"])
-                meta_h.append(m["height"])
-                meta_c.append(m["channels"])
-                payloads.append(payload)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": payloads,
-                    "flat_sum": sums,
-                    "meta_w": meta_w,
-                    "meta_h": meta_h,
-                    "meta_channels": meta_c,
-                    "psnr_ok": psnr_ok,
-                }
-            )
-
-    decoded = p.mapInPandas(
-        run,
-        "doc_id long, payload binary, flat_sum long, meta_w int, "
-        "meta_h int, meta_channels int, psnr_ok boolean",
-    )
-    return (
-        media_meta_cols(decoded)
-        .select(
-            "doc_id", "sniffed_type", "meta_w", "meta_h",
-            "meta_channels", "flat_sum", "psnr_ok",
-        )
-        .orderBy("doc_id")
-    )
-
-
-_Q39_SQL = """
-WITH base AS (
-    SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS i
-    FROM documents ORDER BY doc_id LIMIT 240
-)
-SELECT doc_id,
-    'jpeg' AS sniffed_type,
-    CAST(8 + (i*7) % 25 AS INT) AS meta_w,
-    CAST(8 + (i*11) % 21 AS INT) AS meta_h,
-    CAST(1 AS INT) AS meta_channels,
-    CAST(((i*13) % 128) * 2 * (8 + (i*7) % 25) * (8 + (i*11) % 21) AS BIGINT)
-        AS flat_sum,
-    TRUE AS psnr_ok
-FROM base
-ORDER BY doc_id
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "q01_pricing_summary": q01_pricing_summary,
@@ -2125,29 +1283,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q16_stratified_split": q16_stratified_split,
         "q17_alternating_dedup": q17_alternating_dedup,
         "q18_seeded_sample": q18_seeded_sample,
-        "q19_minhash_pairs": q19_minhash_pairs,
-        "q20_ngram_jaccard": q20_ngram_jaccard,
-        "q21_simhash": q21_simhash,
-        "q22_langid": q22_langid,
-        "q23_quality_score": q23_quality_score,
-        "q24_embedding_neardup": q24_embedding_neardup,
-        "q25_rolling_fingerprint": q25_rolling_fingerprint,
         "q26_payload_normalize": q26_payload_normalize,
         "q27_vectorize_payload": q27_vectorize_payload,
         "q28_dissolve_components": q28_dissolve_components,
         "q29_docs_ingest": q29_docs_ingest,
-        "q30_neardup_dedup": q30_neardup_dedup,
         "q31_spans_from_docs": q31_spans_from_docs,
         "q32_spans_build_dataset": q32_spans_build_dataset,
         "q33_lineage_resume": q33_lineage_resume,
-        "q34_ann_topk_lsh": q34_ann_topk_lsh,
         "q35_holed_clip": q35_holed_clip,
-        "q36_media_roundtrip": q36_media_roundtrip,
-        "q37_stream_exact_dedup": q37_stream_exact_dedup,
-        "q38_stream_tiles": q38_stream_tiles,
-        "q39_jpeg_roundtrip": q39_jpeg_roundtrip,
-        "q40_ann_topk_ivf": q40_ann_topk_ivf,
-        "q41_mjpeg_frames": q41_mjpeg_frames,
     }
 
 
@@ -2171,27 +1314,12 @@ def oracle_sql() -> dict[str, str]:
         "q16_stratified_split": _Q16_SQL,
         "q17_alternating_dedup": _Q17_SQL,
         "q18_seeded_sample": _Q18_SQL,
-        "q19_minhash_pairs": _Q19_SQL,
-        "q20_ngram_jaccard": _Q20_SQL,
-        "q21_simhash": _Q21_SQL,
-        "q22_langid": _Q22_SQL,
-        "q23_quality_score": _Q23_SQL,
-        "q24_embedding_neardup": _Q24_SQL,
-        "q25_rolling_fingerprint": _Q25_SQL,
         "q26_payload_normalize": _Q26_SQL,
         "q27_vectorize_payload": _Q27_SQL,
         "q28_dissolve_components": _Q28_SQL,
         "q29_docs_ingest": _Q29_SQL,
-        "q30_neardup_dedup": _Q30_SQL,
         "q31_spans_from_docs": _Q31_SQL,
         "q32_spans_build_dataset": _Q31_SQL,
         "q33_lineage_resume": _Q31_SQL,
-        "q34_ann_topk_lsh": _Q34_SQL,
         "q35_holed_clip": _Q35_SQL,
-        "q36_media_roundtrip": _Q36_SQL,
-        "q37_stream_exact_dedup": _Q37_SQL,
-        "q38_stream_tiles": _Q29_SQL,
-        "q39_jpeg_roundtrip": _Q39_SQL,
-        "q40_ann_topk_ivf": _Q40_SQL,
-        "q41_mjpeg_frames": _Q41_SQL,
     }

@@ -1,1 +1,1 @@
-"""Spark operators: tiling, spatial joins, kNN, dedup, text, similarity."""
+"""Spark operators: tiling, spatial joins, kNN, dissolve, raster payloads, splits."""

@@ -154,29 +154,6 @@ def clip_to_rect(
     )
 
 
-@pandas_udf(T.BooleanType())
-def is_sparse(geom_wkt: pd.Series) -> pd.Series:
-    return pd.Series([kernels.is_sparse_multipolygon(mp) for mp in _memo_parse(geom_wkt)])
-
-
-@pandas_udf(T.BooleanType())
-def contains_point(geom_wkt: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    """Point-in-polygon (boundary-inclusive), vectorized per batch by
-    grouping points that share a geometry."""
-    df = pd.DataFrame({"g": geom_wkt, "x": x.astype(float), "y": y.astype(float)})
-    out = np.zeros(len(df), dtype=bool)
-    for g, grp in df.groupby("g", sort=False):
-        try:
-            mp = wkt.parse_wkt(g)
-        except (ValueError, IndexError):
-            mp = []
-        if mp:
-            out[grp.index] = kernels.points_in_multipolygon(
-                grp["x"].values, grp["y"].values, mp
-            )
-    return pd.Series(out)
-
-
 @pandas_udf(T.ArrayType(T.DoubleType()))
 def clip_and_normalize(
     geom_wkt: pd.Series,

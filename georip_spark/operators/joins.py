@@ -135,16 +135,13 @@ def spatial_join_tiles_regions(
     """Join tile footprints (bbox columns minx/miny/maxx/maxy +
     region/start_year/end_year keys) against prepared region geometries.
 
-    how:
-      'inner'      matched (tile, region) pairs + exact intersection
-      'left'       additionally keep unmatched tiles with
-                   geometry='POLYGON EMPTY' (reference left-outer row,
-                   georip/geoprocessing/mapping.py:263-265)
-      'left_semi'  tiles that intersect ≥1 region (J4 keep-filter)
-      'left_anti'  tiles that intersect none
+    how: only 'inner' — matched (tile, region) pairs + exact
+      intersection; any other value raises ValueError.
     on_years: also equi-join on (region, start_year, end_year) — the
       J1/J3 year-span matching law.
     """
+    if how != "inner":
+        raise ValueError(f"spatial_join_tiles_regions: how must be 'inner' (got {how!r})")
     if "geometry" in exclude_carry and (refine or clip):
         raise ValueError(
             "cannot exclude 'geometry' from the carry when refine/clip "
@@ -225,9 +222,10 @@ def spatial_join_tiles_regions(
         # columns entirely. Per-key factor k ≈ share·par (capped at
         # 2·par) splits the hot key's probe rows across ~k tasks —
         # the explicit-salting win AQE's byte-threshold skew join
-        # misses on skinny-row/compute-cost skew (jobs/skew_demo.py:
-        # 2.47× vs 1.04×). Broadcast joins skip the probe: the probe
-        # side is never shuffled there, so no partition can be hot.
+        # misses on skinny-row/compute-cost skew (measured 2.47× vs
+        # 1.04×, NOTES.md "Round-1 closing measurements"). Broadcast
+        # joins skip the probe: the probe side is never shuffled
+        # there, so no partition can be hot.
         spark = tiles.sparkSession
         par = spark.sparkContext.defaultParallelism
         cnt_df = build.groupBy(*join_keys).count()
@@ -320,20 +318,10 @@ def spatial_join_tiles_regions(
             )
         )
 
-    tile_cols = [c for c in tiles.columns]
-
-    if how == "left_semi":
-        # distinct tile keys that matched (media_ref is the tile pk)
-        matched = cand.select("media_ref").distinct()
-        return tiles.join(matched, "media_ref", "left_semi")
-    if how == "left_anti":
-        matched = cand.select("media_ref").distinct()
-        return tiles.join(matched, "media_ref", "left_anti")
-
     drop_cols = ("is_empty",) if keep_region_bbox else (
         "g_minx", "g_miny", "g_maxx", "g_maxy", "is_empty")
     out_carry = [c for c in carry if c not in drop_cols]
-    out = cand.select(*tile_cols, *out_carry)
+    out = cand.select(*tiles.columns, *out_carry)
     if clip:
         out = out.withColumn(
             "clipped",
@@ -342,19 +330,6 @@ def spatial_join_tiles_regions(
                 F.col("maxx"), F.col("maxy"),
             ),
         )
-    if how == "left":
-        unmatched = tiles.join(
-            cand.select("media_ref").distinct(), "media_ref", "left_anti"
-        )
-        types = dict((f.name, f.dataType) for f in out.schema.fields)
-        for c in out_carry:
-            unmatched = unmatched.withColumn(c, F.lit(None).cast(types[c]))
-        unmatched = unmatched.withColumn("geometry", F.lit("POLYGON EMPTY"))
-        if clip:
-            unmatched = unmatched.withColumn("clipped", F.lit("POLYGON EMPTY"))
-            unmatched = unmatched.select(*out.columns)
-        out = out.unionByName(unmatched.select(*[c for c in out.columns if c in unmatched.columns]),
-                              allowMissingColumns=True)
     return out
 
 
@@ -671,7 +646,7 @@ def knn_join(
     grow, which is what keeps wide-ring escalation affordable when the
     right side is fact-sized).
 
-    Tail rule (measured, jobs/knn_profile.py): the all-pairs tail
+    Tail rule (measured, NOTES.md "kNN tail"): the all-pairs tail
     costs n_rem·|right| cross rows through one window — ~1s at ~750k
     pairs and ~5s at 6.3M on the profiling VM, i.e. quadratic in SF if
     entered too early. It is taken only when n_rem·|right| ≤

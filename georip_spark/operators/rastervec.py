@@ -104,20 +104,6 @@ def slice_chip(
     )
 
 
-def synth_payload(key: Column, width: Column, height: Column, nodata: Column) -> Column:
-    """Deterministic NDVI-like payload in [-1,1] with nodata patches,
-    from pure arithmetic on (key, pixel index)."""
-    n = (width * height).cast("int")
-    h = F.xxhash64(key)
-
-    def val(i: Column) -> Column:
-        u = F.pmod(h + i * F.lit(2654435761), F.lit(1 << 20)) / F.lit(float(1 << 20))
-        is_nd = F.pmod(h + i * F.lit(40503), F.lit(97)) < 5  # ~5% nodata
-        return F.when(is_nd, nodata).otherwise((u * 2.0 - 1.0)).cast("float")
-
-    return F.transform(F.sequence(F.lit(0), n - 1), val)
-
-
 @pandas_udf(T.BinaryType())
 def _encode_png_gray(payload: pd.Series, width: pd.Series) -> pd.Series:
     from georip_spark import codecs

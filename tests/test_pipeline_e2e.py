@@ -124,7 +124,7 @@ def test_auto_salted_join_same_result(spark, tiny, engine_out):
     """salt="auto" (histogram-driven per-key salting) must be a pure
     execution-strategy change: identical spans, whichever keys it
     decides to salt (on the tiny fixture the hot-key floor usually
-    means none — both branches are exercised by jobs/skew_demo.py)."""
+    means none — the hot branch is test_auto_salt_hot_key_parity)."""
     rasters, regions = tiny
     auto = build_dataset(
         rasters, regions, salt="auto", broadcast_regions=False
@@ -173,6 +173,16 @@ def test_auto_salt_hot_key_parity(spark):
         )
 
     assert pairs("auto") == pairs(None)
+
+
+def test_spatial_join_rejects_other_how():
+    """Only the inner join is implemented; the outer, semi and anti
+    modes had no caller and fail loudly instead of silently joining."""
+    from georip_spark.operators.joins import spatial_join_tiles_regions
+
+    for how in ("left", "left_semi", "left_anti"):
+        with pytest.raises(ValueError, match="how must be 'inner'"):
+            spatial_join_tiles_regions(None, None, how=how)
 
 
 def test_broadcast_join_same_result(spark, tiny, engine_out):
