@@ -16,7 +16,7 @@ geo         pure-numpy geometry kernels (WKT, point-in-polygon,
             No shapely / GDAL / h3 — everything vectorized numpy
             driven through Arrow-batched pandas UDFs.
 operators   Spark operators: tiling, cell-indexed spatial joins, kNN,
-            dissolve, raster payload ops, dataset splits.
+            dissolve, raster payload ops, media decode, dataset splits.
 oracle      single-node pandas reimplementation of the reference
             semantics, used as the pytest parity oracle
             (the reference itself ships no tests — SURVEY.md §5).

@@ -1,7 +1,7 @@
 """From-scratch baseline JPEG codec (ITU-T T.81 / ISO 10918-1).
 
-Closes the last disclosed multimodal stub (VERDICT r4 "What's
-missing" #3): the sandbox ships no PIL/cv2/ffmpeg, but baseline
+Lets the multimodal decode surface read JPEG without a native
+dependency: the engine depends on no PIL/cv2/ffmpeg, but baseline
 sequential JPEG is a fully public spec whose only primitives are the
 8×8 DCT (numpy matmul), uniform quantization, and canonical Huffman
 coding — all implementable from T.81 directly, the same way
@@ -20,7 +20,7 @@ Scope (disclosed):
 
 Reference parity: the reference never parses JPEG itself (it reads
 GeoTIFF via GDAL and writes PNG via skimage —
-``/root/reference/georip/raster/conversion.py:12-36``); this module
+``georip/raster/conversion.py:12-36``); this module
 exists so the engine's multimodal decode surface
 (``operators/multimodal.py``) covers the dominant web image format
 with zero native dependencies.

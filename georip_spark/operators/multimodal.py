@@ -9,7 +9,7 @@ MJPEG-AVI video via the from-scratch spec implementations in
 ``georip_spark.codecs``, ``georip_spark.jpeg`` and
 ``georip_spark.avi`` (stdlib zlib + numpy — no native codec
 libraries needed). Formats that genuinely require codec machinery
-the sandbox lacks (progressive/arithmetic JPEG, MP4/H.264 and all
+this engine does not carry (progressive/arithmetic JPEG, MP4/H.264 and all
 inter-frame video) keep the disclosed stub: ``decode_stub='error'``
 raises NotImplementedError for unrecognized payloads (the honest
 production posture), ``decode_stub='fake'`` produces a deterministic

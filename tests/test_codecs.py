@@ -1,7 +1,9 @@
 """Codec tests: PNG against an independent in-test unfilter oracle +
-roundtrip properties."""
+roundtrip properties; WAV against the stdlib ``wave`` module."""
 
+import io
 import struct
+import wave
 import zlib
 
 import numpy as np
@@ -231,3 +233,82 @@ class TestPngRobustness:
         with pytest.raises(ValueError):
             codecs.png_decode(data[: len(data) - 6])
 
+
+class TestWav:
+    @pytest.mark.parametrize("dtype", [np.uint8, np.int16, np.int32,
+                                       np.float32, np.float64])
+    def test_roundtrip(self, dtype):
+        rng = np.random.default_rng(3)
+        if np.issubdtype(dtype, np.integer):
+            info = np.iinfo(dtype)
+            samples = rng.integers(info.min, info.max, (100, 2)).astype(dtype)
+        else:
+            samples = rng.standard_normal((100, 2)).astype(dtype)
+        out, rate = codecs.wav_decode(codecs.wav_encode(samples, 16000))
+        assert rate == 16000
+        np.testing.assert_array_equal(out, samples)
+        assert out.dtype == samples.dtype
+
+    @pytest.mark.parametrize("width,dtype", [(1, np.uint8), (2, np.int16),
+                                             (4, np.int32)])
+    def test_stdlib_wave_reads_our_encode(self, width, dtype):
+        rng = np.random.default_rng(width)
+        info = np.iinfo(dtype)
+        samples = rng.integers(info.min, info.max, (64, 2)).astype(dtype)
+        data = codecs.wav_encode(samples, 8000)
+        with wave.open(io.BytesIO(data)) as w:
+            assert w.getnchannels() == 2
+            assert w.getframerate() == 8000
+            assert w.getsampwidth() == width
+            assert w.getnframes() == 64
+            frames = w.readframes(64)
+        np.testing.assert_array_equal(
+            np.frombuffer(frames, dtype).reshape(-1, 2), samples
+        )
+
+    def test_our_decode_reads_stdlib_wave(self):
+        rng = np.random.default_rng(9)
+        samples = rng.integers(-32768, 32767, (50, 1), dtype=np.int16)
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(44100)
+            w.writeframes(samples.tobytes())
+        out, rate = codecs.wav_decode(buf.getvalue())
+        assert rate == 44100
+        np.testing.assert_array_equal(out, samples)
+
+    def test_24bit_pcm(self):
+        # hand-packed LE 3-byte samples with known int32<<8 values
+        vals = [1, -1, 8388607, -8388608, 256]
+        packed = b"".join(
+            (v & 0xFFFFFF).to_bytes(3, "little") for v in vals
+        )
+        fmt = struct.pack("<HHIIHH", 1, 1, 48000, 48000 * 3, 3, 24)
+        body = (b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+                + b"data" + struct.pack("<I", len(packed)) + packed
+                + (b"\x00" if len(packed) & 1 else b""))
+        data = b"RIFF" + struct.pack("<I", len(body)) + body
+        out, rate = codecs.wav_decode(data)
+        assert rate == 48000
+        np.testing.assert_array_equal(out[:, 0], np.array(vals) * 256)
+
+    def test_extensible_float(self):
+        samples = np.linspace(-1, 1, 32, dtype=np.float32)[:, None]
+        data = bytearray(codecs.wav_encode(samples, 22050))
+        # rewrite fmt as WAVE_FORMAT_EXTENSIBLE wrapping IEEE float
+        base = struct.unpack("<HHIIHH", bytes(data[20:36]))
+        # cbSize=22, validbits=32, channelmask=0, then the SubFormat
+        # GUID whose leading <H carries the real format (3 = float)
+        ext = struct.pack("<HHIIHH", 0xFFFE, *base[1:]) + struct.pack(
+            "<HHIH", 22, 32, 0, 3
+        ) + bytes(14)
+        new = (bytes(data[:16]) + struct.pack("<I", len(ext)) + ext
+               + bytes(data[16 + 4 + 16:]))
+        new = bytearray(new)
+        new[4:8] = struct.pack("<I", len(new) - 8)
+        out, rate = codecs.wav_decode(bytes(new))
+        np.testing.assert_array_equal(out, samples)
+        assert codecs.sniff(bytes(new)) == "wav"
+        assert codecs.wav_meta(bytes(new))["audio_format"] == 3
