@@ -749,7 +749,7 @@ def q27_vectorize_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic payload — so the oracle catches any ring-tracing,
     hole-handling or area-kernel bug that changes covered pixels."""
     from georip_spark.operators.rastervec import vectorize_payload
-    from georip_spark.operators import geom_udfs
+    from georip_spark.operators import jvm_wkt
 
     p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") % 50 == 0)
     p2 = p.select(
@@ -763,7 +763,7 @@ def q27_vectorize_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         vectorize_payload(F.col("payload"), F.lit(16), F.lit(0.5)).alias("geometry"),
     )
-    stats = geom_udfs.geometry_stats(vec, "geometry")
+    stats = jvm_wkt.attach_stats(vec, "geometry")
     return stats.select(
         "p_partkey",
         F.round("area", 2).alias("area"),

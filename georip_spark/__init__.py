@@ -13,21 +13,22 @@ Sub-packages
 ------------
 geo         pure-numpy geometry kernels (WKT, point-in-polygon,
             polygon clipping, hierarchical cell index, affine math).
-            No shapely / GDAL / h3 — everything vectorized numpy
-            driven through Arrow-batched pandas UDFs.
+            No shapely / GDAL / h3. The pipeline mirrors the ones it
+            needs as JVM column math; the numpy kernels are the
+            tests' parity oracle and back the off-path column ops.
 operators   Spark operators: tiling, cell-indexed spatial joins, kNN,
-            dissolve, raster payload ops, media decode, dataset splits.
+            dissolve, raster payload ops, dataset splits.
 oracle      single-node pandas reimplementation of the reference
             semantics, used as the pytest parity oracle
             (the reference itself ships no tests — SURVEY.md §5).
 
 Design notes (scale-first):
 - All hot-path expressions are built-in pyspark.sql.functions (JVM,
-  whole-stage codegen). Python appears only in Arrow-batched pandas
-  UDFs for exact-geometry refinement, never per-row.
+  whole-stage codegen): the WKT parse, the geometry stats and the clip
+  included. The pipeline's plan has no Python UDF stage.
 - Spatial joins are cell-indexed equi-joins (broadcast for small dims,
-  sort-merge + AQE skew handling otherwise) with optional explicit
-  salting for dense cells.
+  a shuffle-hash join otherwise) with optional explicit salting for
+  dense cells.
 - Synthetic data generation is pure column math over spark.range —
   no driver-side loops — so the same generator runs at SF 1e-3 and
   SF 1e3 unchanged.

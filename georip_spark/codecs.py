@@ -1,33 +1,24 @@
-"""From-scratch media codecs over stdlib ``zlib`` + numpy.
+"""From-scratch PNG codec over stdlib ``zlib`` + numpy.
 
-The engine depends on no codec libraries (PIL/cv2/soundfile),
-but two of the three media families this engine's contract covers have
-fully public, compression-free-or-stdlib formats:
-
-* **PNG** — W3C PNG spec (ISO/IEC 15948; RFC 2083). The only
-  compression primitive is DEFLATE, which stdlib ``zlib`` provides;
-  everything else (chunk framing, CRC-32 over chunk type+data,
-  scanline filters None/Sub/Up/Average/Paeth, big-endian sample
-  packing, palette/tRNS expansion) is implemented here from the spec.
-* **WAV** — RIFF/WAVE (Microsoft/IBM, public): chunk walk, canonical
-  ``fmt `` parse (PCM, IEEE-float, and the WAVE_FORMAT_EXTENSIBLE
-  wrapper), 8/16/24/32-bit int and 32/64-bit float sample decode.
-
-Video (MP4/H.264 etc.) stays honestly out of scope — those require a
-real entropy-coded codec, not a container walk — so the multimodal
-video path keeps its disclosed stub.
+The engine depends on no codec libraries (PIL/cv2). PNG — W3C PNG
+spec (ISO/IEC 15948; RFC 2083) — needs none: its only compression
+primitive is DEFLATE, which stdlib ``zlib`` provides; everything else
+(chunk framing, CRC-32 over chunk type+data, scanline filters
+None/Sub/Up/Average/Paeth, big-endian sample packing, palette/tRNS
+expansion) is implemented here from the spec.
 
 Reference parity: the reference emits PNG chips via skimage
 (``georip/raster/conversion.py:12-36``) and never parses media itself;
-this module is what lets the Spark engine do the same emission
+``png_encode`` is what lets the Spark engine do the same emission
 (``operators/rastervec.chips_to_png``) with zero native dependencies.
+``png_decode`` / ``png_meta`` are the PNG tests' oracle.
 
-Scale notes: these run inside Arrow-batched ``mapInPandas`` workers
-(see ``operators/multimodal.py``) — per-item byte work on chip-sized
-payloads, never on the driver. Filters None/Up/Sub decode fully
-vectorized (Sub is a mod-256 cumsum per byte lane); Average/Paeth
-fall back to a per-byte loop, which our encoder never emits (it
-writes filter None) but external PNGs may.
+Scale notes: ``png_encode`` runs inside an Arrow-batched pandas UDF
+(``rastervec._encode_png_gray``) — per-item byte work on chip-sized payloads,
+never on the driver. Filters None/Up/Sub decode fully vectorized (Sub
+is a mod-256 cumsum per byte lane); Average/Paeth fall back to a
+per-byte loop, which our encoder never emits (it writes filter None)
+but external PNGs may.
 """
 
 from __future__ import annotations
@@ -265,144 +256,11 @@ def png_decode(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# WAV (RIFF/WAVE)
-# ---------------------------------------------------------------------------
-
-_WAVE_PCM = 1
-_WAVE_FLOAT = 3
-_WAVE_EXTENSIBLE = 0xFFFE
-
-
-def _wav_chunks(data: bytes):
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV: bad RIFF/WAVE header")
-    pos = 12
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        body = data[pos + 8 : pos + 8 + size]
-        if len(body) != size:
-            raise ValueError(f"truncated WAV chunk {cid!r}")
-        yield cid, body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-
-
-def wav_meta(data: bytes) -> dict:
-    """Parse the ``fmt `` chunk: format/channels/rate/bits/n_frames."""
-    fmt = None
-    n_data = None
-    for cid, body in _wav_chunks(data):
-        if cid == b"fmt ":
-            if len(body) < 16:
-                raise ValueError("WAV: fmt chunk too short")
-            audio_fmt, ch, rate, _brate, balign, bits = struct.unpack(
-                "<HHIIHH", body[:16]
-            )
-            if audio_fmt == _WAVE_EXTENSIBLE:
-                if len(body) < 26:
-                    raise ValueError("WAV: extensible fmt too short")
-                # SubFormat GUID's first two bytes carry the real format
-                (audio_fmt,) = struct.unpack("<H", body[24:26])
-            fmt = {
-                "audio_format": audio_fmt,
-                "n_channels": ch,
-                "sample_rate": rate,
-                "bits": bits,
-                "block_align": balign,
-            }
-        elif cid == b"data":
-            n_data = len(body)
-    if fmt is None or n_data is None:
-        raise ValueError("WAV: missing fmt or data chunk")
-    fmt["n_frames"] = n_data // max(1, fmt["block_align"])
-    return fmt
-
-
-def wav_decode(data: bytes) -> tuple[np.ndarray, int]:
-    """Decode WAV PCM/float to ((n_frames, n_channels) array, rate).
-
-    dtype: uint8 (8-bit is unsigned per spec), int16, int32 (24-bit
-    widened into the high 3 bytes of int32, spec-standard), float32,
-    float64.
-    """
-    meta = wav_meta(data)
-    body = next(b for cid, b in _wav_chunks(data) if cid == b"data")
-    fmt, bits, ch = meta["audio_format"], meta["bits"], meta["n_channels"]
-    if fmt == _WAVE_PCM:
-        if bits == 8:
-            arr = np.frombuffer(body, np.uint8)
-        elif bits == 16:
-            arr = np.frombuffer(body, "<i2")
-        elif bits == 24:
-            b3 = np.frombuffer(body, np.uint8)
-            b3 = b3[: len(b3) - len(b3) % 3].reshape(-1, 3)
-            widened = np.zeros((len(b3), 4), np.uint8)
-            widened[:, 1:] = b3  # little-endian: high 3 bytes keep sign
-            arr = widened.reshape(-1).view("<i4")
-        elif bits == 32:
-            arr = np.frombuffer(body, "<i4")
-        else:
-            raise ValueError(f"WAV: unsupported PCM bit depth {bits}")
-    elif fmt == _WAVE_FLOAT:
-        if bits == 32:
-            arr = np.frombuffer(body, "<f4")
-        elif bits == 64:
-            arr = np.frombuffer(body, "<f8")
-        else:
-            raise ValueError(f"WAV: unsupported float bit depth {bits}")
-    else:
-        raise ValueError(f"WAV: unsupported audio format {fmt}")
-    arr = arr[: (len(arr) // ch) * ch]
-    return arr.reshape(-1, ch), meta["sample_rate"]
-
-
-def wav_encode(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Encode (n_frames,) or (n_frames, n_channels) samples as WAV.
-
-    int16/int32/uint8 -> PCM; float32/float64 -> IEEE float.
-    """
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    if samples.ndim != 2:
-        raise ValueError(f"unsupported sample shape {samples.shape}")
-    kind_map = {
-        np.dtype(np.uint8): (_WAVE_PCM, 8, np.uint8),
-        np.dtype(np.int16): (_WAVE_PCM, 16, "<i2"),
-        np.dtype(np.int32): (_WAVE_PCM, 32, "<i4"),
-        np.dtype(np.float32): (_WAVE_FLOAT, 32, "<f4"),
-        np.dtype(np.float64): (_WAVE_FLOAT, 64, "<f8"),
-    }
-    if samples.dtype not in kind_map:
-        raise ValueError(f"unsupported sample dtype {samples.dtype}")
-    fmt, bits, store = kind_map[samples.dtype]
-    ch = samples.shape[1]
-    balign = ch * bits // 8
-    body = np.ascontiguousarray(samples.astype(store)).tobytes()
-    fmt_chunk = struct.pack(
-        "<HHIIHH", fmt, ch, sample_rate, sample_rate * balign, balign, bits
-    )
-    payload = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_chunk)) + fmt_chunk
-        + b"data" + struct.pack("<I", len(body)) + body
-        + (b"\x00" if len(body) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(payload)) + payload
-
-
-# ---------------------------------------------------------------------------
 # dispatch
 # ---------------------------------------------------------------------------
 
 def sniff(payload: bytes) -> str | None:
-    """Identify a payload by magic bytes:
-    'png' | 'wav' | 'jpeg' | 'avi' | None."""
+    """Identify a payload by magic bytes: 'png' | None."""
     if payload[:8] == _PNG_SIG:
         return "png"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return "wav"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return "avi"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
     return None

@@ -3,7 +3,10 @@
 No shapely / GDAL / h3 anywhere: WKT parsing, point-in-polygon,
 polygon clipping, areas, sparse-geometry predicates and the
 hierarchical planar cell index are implemented from scratch on
-numpy arrays and driven through Arrow-batched pandas UDFs.
+numpy arrays. The pipeline runs their JVM column-math mirrors
+(operators/jvm_wkt.py, operators/jvm_clip.py, cells.cell_expr); the
+numpy kernels are the tests' parity oracle and back the Arrow UDFs
+in operators/geom_udfs.py.
 
 Modules:
     wkt      WKT <-> ring-list parsing/serialization

@@ -1,11 +1,11 @@
-"""6-param affine pixel↔CRS transforms as pure Spark column math.
+"""6-param affine pixel→CRS transform as pure Spark column math.
 
-The reference wraps rasterio's ``src.xy`` / ``src.index``
+The reference wraps rasterio's ``src.xy``
 (georip/geoprocessing/conversion.py:10-58) and builds tile footprints
 by transforming 4 window corners (create_tile_polygon,
-georip/geometry/polygons.py:217-249). Both are closed-form over the
-affine 6-tuple — no UDF needed; these helpers keep them inside
-whole-stage codegen.
+georip/geometry/polygons.py:217-249). That is closed-form over the
+affine 6-tuple — no UDF needed; these helpers keep it inside
+whole-stage codegen (operators/tiling.py's footprint).
 
 Affine convention (rasterio/GDAL): for pixel (col, row),
     x = a*col + b*row + c
@@ -24,21 +24,3 @@ def px_to_x(t: Column, col: Column, row: Column) -> Column:
 def px_to_y(t: Column, col: Column, row: Column) -> Column:
     return t["d"] * col + t["e"] * row + t["f"]
 
-
-def xy_to_col(t: Column, x: Column, y: Column) -> Column:
-    """Inverse affine (det = a*e − b*d)."""
-    det = t["a"] * t["e"] - t["b"] * t["d"]
-    return (t["e"] * (x - t["c"]) - t["b"] * (y - t["f"])) / det
-
-
-def xy_to_row(t: Column, x: Column, y: Column) -> Column:
-    det = t["a"] * t["e"] - t["b"] * t["d"]
-    return (t["a"] * (y - t["f"]) - t["d"] * (x - t["c"])) / det
-
-
-def px_to_x_np(a, b, c, col, row):
-    return a * col + b * row + c
-
-
-def px_to_y_np(d, e, f, col, row):
-    return d * col + e * row + f

@@ -1,7 +1,9 @@
 """Vectorized geometry kernels (numpy only).
 
-These are the exact-refinement kernels that run inside Arrow-batched
-pandas UDFs after the cell-indexed equi-join has pruned candidates.
+These are the exact-refinement kernels behind the Arrow UDFs in
+operators/geom_udfs.py. The pipeline runs their JVM mirrors
+(operators/jvm_clip.py, operators/jvm_wkt.py); these kernels are the
+tests' parity oracle for them.
 Everything operates on the ring-list representation from
 ``georip_spark.geo.wkt``.
 

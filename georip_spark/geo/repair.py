@@ -75,13 +75,6 @@ def _proper_crossings(pts: np.ndarray) -> dict[int, list[tuple[float, tuple]]]:
     return out
 
 
-def is_simple_ring(ring: Ring) -> bool:
-    r = np.asarray(ring, dtype=np.float64)
-    if len(r) < 4:
-        return False
-    return not _proper_crossings(r[:-1])
-
-
 def split_simple_loops(ring: Ring, min_area: float = 0.0) -> list[Ring]:
     """Split a self-intersecting closed ring at its crossing points
     into simple loops (buffer(0)-style untwist). A simple input comes

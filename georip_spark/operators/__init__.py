@@ -1,1 +1,1 @@
-"""Spark operators: tiling, spatial joins, kNN, dissolve, raster payloads, media decode, splits."""
+"""Spark operators: tiling, spatial joins, kNN, dissolve, raster payloads, splits."""

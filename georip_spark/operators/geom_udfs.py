@@ -1,10 +1,14 @@
 """Arrow-batched pandas UDFs wrapping the numpy geometry kernels.
 
-These are the ONLY places Python touches row data in the engine, and
-all of them sit *after* the cell-indexed equi-join has pruned
-candidates — i.e. they run on candidate pairs, not the cross product.
-Per-batch WKT parse results are memoized (the dim side repeats the
-same geometry across many candidate rows in a batch).
+The pipeline's hot path runs none of them: the dim prepare is JVM
+column math (operators/jvm_wkt.py) and so is the clip
+(operators/jvm_clip.py). ``geom_bounds`` and ``clip_and_normalize``
+are the tests' parity oracles for those two; ``rect_intersects`` and
+``clip_to_rect`` serve ``spatial_join_tiles_regions``' optional
+``refine`` / ``clip`` steps on candidate pairs, and the rest are
+column ops (repair, CRS transform) with no JVM twin. Per-batch WKT
+parse results are memoized (the dim side repeats the same geometry
+across many candidate rows in a batch).
 
 Reference semantics: shapely `.intersects` / `.intersection` calls at
 georip/geoprocessing/mapping.py:259-261, sparse test at
@@ -15,7 +19,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -34,8 +37,8 @@ _BOUNDS_SCHEMA = T.StructType(
         # per-part shell rings (unclosed, interleaved x0,y0,x1,y1,…) —
         # parsed ONCE on the dim side so the JVM clip fast path never
         # needs the WKT string (or any Python) on the fact-sized pair
-        # stream; has_holes gates the rows that must still take the
-        # Arrow kernel (hole-aware largest-part selection)
+        # stream; has_holes gates the rows that take the hole-aware
+        # JVM clip (jvm_clip.clip_normalize_coords_mp)
         T.StructField("shells", T.ArrayType(T.ArrayType(T.DoubleType()))),
         T.StructField("has_holes", T.BooleanType()),
     ]
@@ -266,22 +269,3 @@ repair_geometry = repair_geometry.asNondeterministic()
 transform_geometry = transform_geometry.asNondeterministic()
 transform_geometry_approx = transform_geometry_approx.asNondeterministic()
 
-
-def geometry_stats(df, geom_col: str = "geometry", engine: str = "jvm"):
-    """Attach bounds/validity/area/rect-detection struct fields for
-    ``geom_col``.
-
-    engine="jvm" (default): pure Catalyst column math
-    (operators/jvm_wkt.py) — no Arrow transfer, no Python workers on
-    the dim-prepare path. engine="arrow": the original pandas-UDF
-    kernel pass, kept as the parity oracle (test_jvm_wkt sweeps the
-    two against each other) and as an escape hatch."""
-    if engine == "jvm":
-        from georip_spark.operators import jvm_wkt
-
-        return jvm_wkt.attach_stats(df, geom_col)
-    return df.withColumn("_g", geom_bounds(F.col(geom_col))).select(
-        "*", "_g.minx", "_g.miny", "_g.maxx", "_g.maxy",
-        "_g.is_empty", "_g.is_valid", "_g.area", "_g.is_rect_blccw",
-        "_g.shells", "_g.has_holes",
-    ).drop("_g")

@@ -6,13 +6,14 @@ georip/geoprocessing/utils.py:190-262). This engine replaces it with
 the standard scale pattern:
 
     1. cover both sides with grid cells (pure column math / tiny UDF)
-    2. equi-join on (cell [, year keys])      ← Spark plans this:
-       broadcast when the dim side is small, sort-merge + AQE skew
-       split otherwise
+    2. equi-join on (cell [, year keys]): broadcast when the dim side
+       is small, a shuffle-hash join otherwise (see the hint below)
     3. de-duplicate candidate pairs WITHOUT a shuffle via the
        reference-point trick: a pair is kept only in the single cell
        containing the top-left corner of the two bboxes' overlap
-    4. exact refinement with the numpy kernels in one Arrow batch UDF
+    4. optional exact refinement (``refine`` / ``clip``) with the
+       Arrow geometry kernels; the pipeline passes neither, because
+       its JVM clip (operators/jvm_clip.py) nulls empty intersections
 
 Explicit salting for pathologically hot cells is available
 (``salt=k``): the geometry side replicates k×, the tile side picks a
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 
 from georip_spark.exprcache import cached_column
 from georip_spark.geo import cells
-from georip_spark.operators import geom_udfs
+from georip_spark.operators import geom_udfs, jvm_wkt
 
 DEFAULT_RES = 10  # cell ≈ 1024 CRS units — a couple of 640px/1.0-res tiles
 
@@ -72,13 +73,14 @@ def prepare_regions(regions: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """Attach a stable row id, geometry stats, and the covering-cell
     array to a geometry table. Invalid/empty geometries keep
     is_valid=false so class encoding can Background them; they simply
-    cover no cells. One pandas-UDF pass over the (small) dim side.
+    cover no cells. The stats are JVM column math
+    (jvm_wkt.attach_stats): no Python worker on the dim side.
     """
     with_id = regions.withColumn(
         "geom_id",
         F.xxhash64(*[F.coalesce(F.col(c).cast("string"), F.lit("\0")) for c in regions.columns]),
     )
-    stats = geom_udfs.geometry_stats(with_id, "geometry")
+    stats = jvm_wkt.attach_stats(with_id, "geometry")
     covered = stats.withColumn(
         "cover",
         cached_column(

@@ -3,7 +3,7 @@ replacement for the `geom_bounds` pandas UDF on the dim-prepare path.
 
 Why: after the general JVM clip (operators/jvm_clip.py) landed, the
 one Python stage left on the pipeline's hot path was prepare_regions'
-`geometry_stats` — a WKT parse + bounds/area/shells pass over the
+`geom_bounds` pass — a WKT parse + bounds/area/shells pass over the
 whole dim side (~19 s at 8 cores over 768k regions in the n=256k
 scaling profile, scaling at only 2.7x). This module re-expresses that
 pass with string splits and higher-order functions that run entirely
@@ -302,11 +302,12 @@ def geom_stats_struct(wkt_col: Column) -> Column:
 
 
 def attach_stats(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    """All-JVM equivalent of geom_udfs.geometry_stats: df + the ten
-    stat columns. The struct is expanded through F.inline (a Generate
-    node), which evaluates the parse ONCE per row and is a hard
-    CollapseProject boundary — `.select('_g.minx', …)` on a plain
-    expression struct would inline one full parse per field."""
+    """df + the ten ``geom_stats_struct`` columns, all-JVM (the tests'
+    Arrow oracle is geom_udfs.geom_bounds). The struct is expanded
+    through F.inline (a Generate node), which evaluates the parse ONCE
+    per row and is a hard CollapseProject boundary — `.select('_g.minx',
+    …)` on a plain expression struct would inline one full parse per
+    field."""
     from georip_spark.exprcache import cached_column
 
     stats = cached_column(

@@ -100,8 +100,8 @@ def with_footprint_bbox(tiles: DataFrame) -> DataFrame:
     The footprint is the affine image of the window's 4 corners; its
     bbox (min/max over corners) equals the footprint itself for
     axis-aligned transforms (b=d=0, the fixture case) and is a sound
-    over-approximation for rotated ones (exact refinement happens in
-    the pandas-UDF clip kernel).
+    over-approximation for rotated ones (the exact test is the clip,
+    which nulls empty intersections).
     """
     t = F.col("transform")
     r0, c0 = F.col("tile_row"), F.col("tile_col")

@@ -59,12 +59,6 @@ def class_map_pd(regions: pd.DataFrame, keep_classes=DEFAULT_CLASSES) -> dict[st
     return m
 
 
-def geom_id_pd(row: pd.Series, columns: list[str]) -> int:
-    """Placeholder — engine geom_id is xxhash64; the oracle never
-    compares geom_ids, only final span sequences."""
-    return 0
-
-
 def build_labels_pd(
     tiles: pd.DataFrame,
     regions: pd.DataFrame,

@@ -181,7 +181,7 @@ def _plan(
       stats misestimate WKT-string tables badly (an auto-broadcast
       OOM'd the driver at 384k regions), so the regime is chosen from
       real cardinality — broadcast under 500k regions (~100-250 MB
-      hash relation), sort-merge + AQE skew join above.
+      hash relation), a shuffle-hash join above.
 
     res=None picks the regime-adaptive default (PIPELINE_RES_* above);
     res="auto" resolves it from the dim's actual geometry extents

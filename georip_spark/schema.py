@@ -1,9 +1,10 @@
-"""Canonical StructType schemas for every engine table.
+"""The output contract's StructType schemas: ``SPAN`` and ``DOCS``.
 
 The reference is convention/column-name driven (dynamic pandas frames,
 e.g. georip/geoprocessing/processing.py:14-27 passes column names as
-parameters); here every table has one fixed schema and column-name
-parameters exist only at API boundaries.
+parameters); here the docs table every entry point returns has one
+fixed schema, and tests/test_pipeline_e2e.py asserts that
+``build_dataset`` and ``from_docs`` emit exactly ``DOCS``.
 """
 
 from __future__ import annotations
@@ -24,71 +25,5 @@ DOCS = T.StructType(
     [
         T.StructField("doc_id", T.StringType()),
         T.StructField("spans", T.ArrayType(SPAN)),
-    ]
-)
-
-# --- raster metadata: one row per doc (FIXTURES.md §4) -----------------
-# transform = 6-param affine (a,b,c,d,e,f):  x = a*col + b*row + c
-#                                            y = d*col + e*row + f
-# (mirrors rasterio's Affine consumed at
-#  reference georip/geometry/polygons.py:236)
-AFFINE = T.StructType(
-    [T.StructField(n, T.DoubleType()) for n in ("a", "b", "c", "d", "e", "f")]
-)
-
-RASTERS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("tile_size", T.IntegerType()),
-        T.StructField("stride", T.IntegerType()),
-        T.StructField("transform", AFFINE),
-        T.StructField("crs", T.StringType()),
-        T.StructField("nodata", T.DoubleType()),
-    ]
-)
-
-# --- truth-region vector table (FIXTURES.md §2) ------------------------
-REGIONS = T.StructType(
-    [
-        T.StructField("region", T.StringType()),
-        T.StructField("start_year", T.IntegerType()),
-        T.StructField("end_year", T.IntegerType()),
-        T.StructField("class_name", T.StringType()),
-        T.StructField("geometry", T.StringType()),  # WKT
-    ]
-)
-
-# --- engine intermediate: one row per tile -----------------------------
-TILES = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("tile_row", T.IntegerType()),
-        T.StructField("tile_col", T.IntegerType()),
-        T.StructField("ordinal", T.IntegerType()),
-        # footprint in CRS space (axis-aligned for b=d=0 transforms)
-        T.StructField("minx", T.DoubleType()),
-        T.StructField("miny", T.DoubleType()),
-        T.StructField("maxx", T.DoubleType()),
-        T.StructField("maxy", T.DoubleType()),
-    ]
-)
-
-# --- compiled label rows (reference georip/modeling/yolo/__init__.py:225-238)
-LABELS = T.StructType(
-    [
-        T.StructField("type", T.StringType()),
-        T.StructField("class_id", T.IntegerType()),
-        T.StructField("class_name", T.StringType()),
-        T.StructField("bbox_x", T.DoubleType()),
-        T.StructField("bbox_y", T.DoubleType()),
-        T.StructField("bbox_w", T.DoubleType()),
-        T.StructField("bbox_h", T.DoubleType()),
-        T.StructField("filename", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("segments", T.ArrayType(T.DoubleType())),
     ]
 )

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from georip_spark.operators import geom_udfs, jvm_clip
-from georip_spark.operators.geom_udfs import geometry_stats
+from georip_spark.operators.jvm_wkt import attach_stats
 
 
 def _wkt_ring(pts) -> str:
@@ -64,7 +64,7 @@ class TestJvmClipParity:
             "geometry string, tminx double, tminy double, "
             "tmaxx double, tmaxy double",
         )
-        out = geometry_stats(df).select(
+        out = attach_stats(df).select(
             geom_udfs.clip_and_normalize(
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
@@ -73,7 +73,7 @@ class TestJvmClipParity:
                 F.col("shells"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
                 # production shape: region bbox gates the inside-tile
-                # shortcut arm (geometry_stats bounds)
+                # shortcut arm (attach_stats bounds)
                 g_bbox=(F.col("minx"), F.col("miny"),
                         F.col("maxx"), F.col("maxy")),
             ).alias("jvm"),
@@ -101,7 +101,7 @@ class TestJvmClipParity:
             "geometry string, tminx double, tminy double, "
             "tmaxx double, tmaxy double",
         )
-        got = geometry_stats(df).select(
+        got = attach_stats(df).select(
             geom_udfs.clip_and_normalize(
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
@@ -177,7 +177,7 @@ class TestJvmClipHoledParity:
             "geometry string, tminx double, tminy double, "
             "tmaxx double, tmaxy double",
         )
-        out = geometry_stats(df).select(
+        out = attach_stats(df).select(
             geom_udfs.clip_and_normalize(
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
@@ -232,7 +232,7 @@ class TestJvmClipHoledParity:
             "geometry string, tminx double, tminy double, "
             "tmaxx double, tmaxy double",
         )
-        got = geometry_stats(df).select(
+        got = attach_stats(df).select(
             geom_udfs.clip_and_normalize(
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),

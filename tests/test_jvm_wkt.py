@@ -1,4 +1,5 @@
-"""JVM WKT stats (operators/jvm_wkt.py) vs the pandas-UDF kernel path:
+"""JVM WKT stats (operators/jvm_wkt.py) vs the Arrow kernel
+(geom_udfs.geom_bounds):
 field-for-field parity on the synth corpus plus an adversarial WKT
 sweep (whitespace variants, Z coords, EMPTY forms, POINT, holes,
 multipolygons, scientific/negative numbers, malformed fragments)."""
@@ -9,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from georip_spark.operators import geom_udfs
+from georip_spark.operators.jvm_wkt import attach_stats
 
 FIELDS = [
     "minx", "miny", "maxx", "maxy", "is_empty", "is_valid", "area",
@@ -55,10 +57,17 @@ ADVERSARIAL = [
 ]
 
 
-def _collect(spark, wkts, engine):
+def _arrow_stats(df, geom_col):
+    """The Arrow kernel's stats struct, expanded to one column per field."""
+    return df.withColumn("_g", geom_udfs.geom_bounds(F.col(geom_col))).select(
+        "id", "_g.*"
+    )
+
+
+def _collect(spark, wkts, stats):
     df = spark.createDataFrame([(i, w) for i, w in enumerate(wkts)],
                                "id long, geometry string")
-    out = geom_udfs.geometry_stats(df, "geometry", engine=engine)
+    out = stats(df, "geometry")
     return {r["id"]: r.asDict() for r in out.collect()}
 
 
@@ -69,8 +78,8 @@ def _eq(a, b):
 
 
 def assert_parity(spark, wkts):
-    jvm = _collect(spark, wkts, "jvm")
-    arrow = _collect(spark, wkts, "arrow")
+    jvm = _collect(spark, wkts, attach_stats)
+    arrow = _collect(spark, wkts, _arrow_stats)
     for i, w in enumerate(wkts):
         for f in FIELDS:
             a, b = jvm[i][f], arrow[i][f]
@@ -122,7 +131,7 @@ def test_prepare_regions_plan_has_no_python(spark):
 ])
 def test_jvm_flags(spark, wkt_s, valid, rect, holes):
     df = spark.createDataFrame([(wkt_s,)], "geometry string")
-    r = geom_udfs.geometry_stats(df, "geometry", engine="jvm").collect()[0]
+    r = attach_stats(df, "geometry").collect()[0]
     assert r["is_valid"] is valid
     assert r["is_rect_blccw"] is rect
     assert r["has_holes"] is holes
@@ -158,7 +167,7 @@ def _holed_flags(spark, wkts):
     from georip_spark.operators.jvm_wkt import may_have_holes
 
     df = spark.createDataFrame(list(enumerate(wkts)), "id long, geometry string")
-    out = geom_udfs.geometry_stats(df, "geometry", engine="jvm").select(
+    out = attach_stats(df, "geometry").select(
         "id",
         (F.col("is_valid") & F.col("has_holes")).alias("holed"),
         may_have_holes(F.col("geometry")).alias("may"),

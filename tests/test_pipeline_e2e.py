@@ -212,7 +212,9 @@ def test_regions_prepared_geom_id_stable(spark, tiny, engine_out):
 def test_from_docs_parity(spark, tiny, engine_out):
     """Contract input path: driving the pipeline FROM the docs table
     (posexplode media spans -> parse windows -> rebuild footprints)
-    yields byte-identical span sequences to the raster-driven path."""
+    yields byte-identical span sequences to the raster-driven path,
+    and both emit the output contract's schema (schema.DOCS)."""
+    from georip_spark import schema
     from georip_spark.pipeline import from_docs
 
     rasters, regions = tiny
@@ -221,6 +223,8 @@ def test_from_docs_parity(spark, tiny, engine_out):
     assert spans_from_engine(via_docs["docs_out"]) == spans_from_engine(
         engine_out["docs_out"]
     )
+    for out in (engine_out, via_docs):
+        assert out["docs_out"].schema.simpleString() == schema.DOCS.simpleString()
 
 
 def test_auto_res_same_result(spark, tiny, engine_out):
@@ -355,7 +359,7 @@ class TestRectFastPath:
         assert fast_rows == slow_rows and len(fast_rows) > 0
 
     def test_rect_detection(self, spark):
-        from georip_spark.operators.geom_udfs import geometry_stats
+        from georip_spark.operators.jvm_wkt import attach_stats
 
         rows = [
             # canonical BL-start CCW rect -> fast-path eligible
@@ -372,7 +376,7 @@ class TestRectFastPath:
             ("MULTIPOLYGON (((0 0, 1 0, 1 1, 0 1, 0 0)), ((2 0, 3 0, 3 1, 2 1, 2 0)))", False),
         ]
         df = spark.createDataFrame([(w,) for w, _ in rows], "geometry string")
-        got = [r["is_rect_blccw"] for r in geometry_stats(df).collect()]
+        got = [r["is_rect_blccw"] for r in attach_stats(df).collect()]
         assert got == [e for _, e in rows]
 
     def test_round6_even_matches_numpy(self, spark):
