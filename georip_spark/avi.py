@@ -1,12 +1,11 @@
 """From-scratch MJPEG-AVI container codec (Microsoft AVI RIFF form).
 
-Closes the video side of the multimodal surface with the one video
-format that needs NO inter-frame machinery: Motion-JPEG stores each
-frame as a complete baseline JPEG inside RIFF ``00dc`` chunks, so the
-whole decoder is RIFF walking (the same chunk grammar as
-``codecs.wav_*``) plus ``georip_spark.jpeg``. MP4/H.264 and every
-other entropy-coded inter-frame codec remain the disclosed stub —
-they genuinely need codec libraries this environment lacks.
+The one video format that needs NO inter-frame machinery:
+Motion-JPEG stores each frame as a complete baseline JPEG inside RIFF
+``00dc`` chunks, so the whole decoder is RIFF walking plus
+``georip_spark.jpeg``. MP4/H.264 and every other entropy-coded
+inter-frame codec are out of scope — they need codec libraries the
+engine does not depend on.
 
 Layout emitted/parsed (the canonical AVI RIFF form, public spec —
 Microsoft "AVI RIFF File Reference" / OpenDML AVI):
@@ -24,12 +23,11 @@ Microsoft "AVI RIFF File Reference" / OpenDML AVI):
       'idx1' 16·n   AVIOLDINDEX (keyframe flags, offsets)
 
 Reference parity: the reference never reads video (GDAL rasters
-only); this exists so the engine's decode / frame-sample operators
-(``operators/multimodal.py``) cover a real video format with zero
-native dependencies, the same posture as the PNG/WAV/JPEG codecs.
+only). No pipeline, benchmark or job code imports this module; it
+stays only for its own tests and is slated for retirement (README
+"What the engine keeps").
 
-Scale notes: runs per-item inside Arrow-batched ``mapInPandas``.
-Frame *sampling* never decodes skipped frames — the ``00dc`` walk
+Scale notes: Frame *sampling* never decodes skipped frames — the ``00dc`` walk
 skips their bytes, so sampling every k-th frame costs 1/k of the
 JPEG work (container walking is O(total frames) pointer math).
 """
@@ -132,9 +130,7 @@ def _riff_chunks(data: bytes, start: int, end: int):
 
 
 def avi_meta(data: bytes) -> dict:
-    """Container metadata from the MainAVIHeader (python parse; the
-    JVM column-math parse in ``multimodal.media_meta_cols`` reads the
-    same fixed offsets of this canonical layout)."""
+    """Container metadata from the MainAVIHeader."""
     if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not an AVI file")
     for cc, lt, off, sz in _riff_chunks(data, 12, len(data)):

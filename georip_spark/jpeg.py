@@ -1,7 +1,6 @@
 """From-scratch baseline JPEG codec (ITU-T T.81 / ISO 10918-1).
 
-Lets the multimodal decode surface read JPEG without a native
-dependency: the engine depends on no PIL/cv2/ffmpeg, but baseline
+Reads and writes JPEG without a native dependency: the engine depends on no PIL/cv2/ffmpeg, but baseline
 sequential JPEG is a fully public spec whose only primitives are the
 8×8 DCT (numpy matmul), uniform quantization, and canonical Huffman
 coding — all implementable from T.81 directly, the same way
@@ -20,13 +19,12 @@ Scope (disclosed):
 
 Reference parity: the reference never parses JPEG itself (it reads
 GeoTIFF via GDAL and writes PNG via skimage —
-``georip/raster/conversion.py:12-36``); this module
-exists so the engine's multimodal decode surface
-(``operators/multimodal.py``) covers the dominant web image format
-with zero native dependencies.
+``georip/raster/conversion.py:12-36``). No pipeline, benchmark or
+job code imports this module; it stays only for ``avi.py`` and its
+own tests, and is slated for retirement (README "What the engine
+keeps").
 
-Scale notes: runs per-item inside Arrow-batched ``mapInPandas``
-workers on chip-sized payloads. The DCT/quantize/dequant/IDCT stages
+Scale notes: per-item work on chip-sized payloads. The DCT/quantize/dequant/IDCT stages
 are vectorized numpy over all blocks at once; only the entropy
 coder is a per-coefficient Python loop (inherent to Huffman's
 serial bit stream; ~10⁴ coefficients for a 64×64 chip).

@@ -9,11 +9,7 @@ from pathlib import Path
 import georip_spark
 from georip_spark import codecs
 
-RETIRED = (
-    "georip_spark.jpeg",
-    "georip_spark.avi",
-    "georip_spark.operators.multimodal",
-)
+RETIRED = ("georip_spark.operators.multimodal",)
 
 
 def test_kept_modules_load_nothing_retired(monkeypatch):
