@@ -81,7 +81,6 @@ _APPROX_DATUMS = frozenset({"NAD27"})
 # WGS84 kept as module constants: the UTM fast path and Web Mercator
 # use them directly.
 _A, _F = _ELLIPSOIDS["WGS84"]
-_E2 = _F * (2.0 - _F)
 _K0 = 0.9996
 _FE = 500000.0
 

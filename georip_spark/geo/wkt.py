@@ -22,8 +22,6 @@ Ring = np.ndarray
 Polygon = list[Ring]
 MultiPolygon = list[Polygon]
 
-_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
-
 
 def _parse_ring(body: str) -> Ring:
     pts = []

@@ -26,6 +26,9 @@ for the dense-region workloads the north_rule calls out.
 
 from __future__ import annotations
 
+import math
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -214,40 +217,39 @@ def spatial_join_tiles_regions(
         else ["minx", "miny", "maxx", "maxy"]
     )
     if salt == "auto" and not broadcast_regions:
-        # Data-driven per-key salting (round 6, VERDICT r5 #4): sample
-        # the build side's join-key histogram — two cheap dim-side
-        # jobs, the same hoisting class as auto_res — and salt ONLY
-        # keys owning more than 1/par of the exploded build rows. At
-        # most ``par`` keys can exceed that share, so the hot list is
-        # a ≤par-row driver literal, broadcast-joined to both sides;
-        # cold workloads collect an empty list and skip the salt
-        # columns entirely. Per-key factor k ≈ share·par (capped at
-        # 2·par) splits the hot key's probe rows across ~k tasks —
-        # the explicit-salting win AQE's byte-threshold skew join
-        # misses on skinny-row/compute-cost skew (measured 2.47× vs
-        # 1.04×, NOTES.md "Round-1 closing measurements"). Broadcast
-        # joins skip the probe: the probe side is never shuffled
-        # there, so no partition can be hot.
+        # Data-driven per-key salting (round 6, VERDICT r5 #4): read
+        # the build side's join-key histogram with ONE dim-side
+        # aggregate (the same hoisting class as auto_res; a second one
+        # replayed the dim's WKT stats parse) and salt ONLY keys owning
+        # more than 1/par of the exploded build rows. The aggregate
+        # returns the total and the keys over the 64-row floor (at most
+        # total/64); at most ``par`` of them pass the 1/par share, so
+        # the hot list is a ≤par-row local relation (pandas → Arrow, no
+        # Python worker), broadcast-joined to both sides; cold
+        # workloads skip the salt columns entirely. Per-key factor
+        # k ≈ share·par (capped at 2·par) splits the hot key's probe
+        # rows across ~k tasks — the explicit-salting win AQE's
+        # byte-threshold skew join misses on skinny-row/compute-cost
+        # skew (measured 2.47× vs 1.04×, NOTES.md "Round-1 closing
+        # measurements"). Broadcast joins skip the probe: the probe
+        # side is never shuffled there, so no partition can be hot.
         spark = tiles.sparkSession
-        par = spark.sparkContext.defaultParallelism
+        par = max(spark.sparkContext.defaultParallelism, 1)
         cnt_df = build.groupBy(*join_keys).count()
-        total = cnt_df.agg(F.sum("count").alias("t")).first()["t"] or 0
-        hot_rows = (
-            cnt_df.filter(F.col("count") > F.lit(max(total / max(par, 1), 64.0)))
-            .withColumn(
-                "_k",
-                F.least(
-                    F.lit(2 * par),
-                    F.ceil(F.col("count") * par / F.lit(float(max(total, 1)))),
-                ).cast("int"),
-            )
-            .drop("count")
-            .collect()
-        )
+        hist = cnt_df.agg(
+            F.sum("count").alias("t"),
+            F.collect_list(
+                F.when(F.col("count") > 64, F.struct("count", *join_keys))
+            ).alias("c"),
+        ).first()
+        total = hist["t"] or 0
+        hot_rows = [
+            (*r[1:], min(2 * par, math.ceil(r["count"] * par / float(max(total, 1)))))
+            for r in hist["c"] if r["count"] > max(total / par, 64.0)
+        ]
         if hot_rows:
-            hot_df = F.broadcast(
-                spark.createDataFrame(hot_rows, cnt_df.drop("count").schema.add("_k", "integer"))
-            )
+            schema = cnt_df.drop("count").schema.add("_k", "integer")
+            hot_df = F.broadcast(spark.createDataFrame(pd.DataFrame(hot_rows), schema))
             build = (
                 build.join(hot_df, join_keys, "left")
                 .withColumn(

@@ -16,6 +16,7 @@ vs the pandas oracle.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -259,13 +260,16 @@ def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
     (get_mapped_classes, georip/modeling/yolo/__init__.py:142-174).
 
     The name universe is the *configured* keep_classes (a handful of
-    strings), so the map is built driver-side with zero Spark jobs and
-    broadcast into the join — at 10^12 docs a distinct-scan over the
-    fact table for a known dimension would be pure waste."""
+    strings), so the map is built driver-side from pandas: Arrow makes
+    it a LocalRelation, whose broadcast runs no Spark job and starts
+    no Python worker (a createDataFrame(list) is a PythonRDD scan that
+    forked pyspark.daemon on every action). At 10^12 docs a
+    distinct-scan over the fact table for a known dimension would be
+    pure waste."""
     names = _kept_names(keep_classes)
     rows = [(n, i) for i, n in enumerate(names)] + [("Background", -1)]
     return regions.sparkSession.createDataFrame(
-        rows, "class_name string, class_id int"
+        pd.DataFrame(rows), "class_name string, class_id int"
     )
 
 
@@ -345,13 +349,16 @@ def build_labels(
 
     The clip is JVM column math for every input shape: canonical
     rectangles take closed-form math, other hole-free geometries the
-    Sutherland–Hodgman clip over their shells. One dim-side aggregate
-    (_any_holed, a text test over regions_prepared.geometry; _plan
-    folds it into its own dim job instead) asks whether any region may
-    be holed; only then does the plan add a third, hole-aware arm over
-    the full ring arrays — it is the only arm correct on holed input,
-    and planning it for a hole-free dim made the benchmark action
-    ~1.5× slower, so it is planned from observed data.
+    Sutherland–Hodgman clip over their shells. It runs once per
+    matched pair, after the join: the hash join's condition holds only
+    the equi-keys and the bbox and reference-point tests. One
+    dim-side aggregate (_any_holed, a text test over
+    regions_prepared.geometry; _plan folds it into its own dim job
+    instead) asks whether any region may be holed; only then does the
+    plan add a third, hole-aware arm over the full ring arrays — it is
+    the only arm correct on holed input, and planning it for a
+    hole-free dim made the benchmark action ~1.5× slower, so it is
+    planned from observed data.
 
     derive_tile_refs (guide §2.3 "shuffle fewer bytes", round 6): the
     caller asserts media_ref == tile_media_ref(doc_id, tile_row,
@@ -395,7 +402,7 @@ def _labels(
     holed: bool,
 ) -> DataFrame:
     """build_labels with the holed answer given: plans the hole-aware
-    clip arm iff ``holed``."""
+    clip arm iff ``holed``, and the clip once, after the join."""
     tiles_keyed = _keyed(tiles)
     derive = bool(derive_tile_refs) and not broadcast_regions
     if derive:
@@ -536,7 +543,16 @@ def _labels(
         coords = coords.when(~F.col("has_holes"), gen).otherwise(gen_mp)
     else:
         coords = coords.otherwise(gen)
-    labeled = joined.withColumn("coords", coords).drop(
+    # The Generate is a barrier that keeps the clip ONCE, after the
+    # join: a filter on a Generate's output is never pushed below it,
+    # and InferFiltersFromGenerate skips a CreateArray child. Without
+    # it PushPredicateThroughJoin moves the isNotNull test — the whole
+    # clip tree — into the hash join's condition: every candidate is
+    # clipped twice, the tree is code-generated again per task and the
+    # join drops out of whole-stage codegen.
+    labeled = joined.select(
+        "*", F.explode(F.array(coords)).alias("coords")
+    ).drop(
         "g_minx", "g_miny", "g_maxx", "g_maxy", "shells", "has_holes", "rings",
     )
     labeled = labeled.filter(F.col("coords").isNotNull())

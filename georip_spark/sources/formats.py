@@ -181,9 +181,9 @@ def yolo_label_lines(labels: DataFrame) -> DataFrame:
 
 
 def write_yolo_labels(labels: DataFrame, out_dir: str) -> None:
-    """Sink: one text row per image; written as a partitioned text
-    table keyed by filename (a real per-file layout would use
-    foreachPartition writers on a cluster filesystem)."""
+    """Sink: one (filename, content) row per image, written as a
+    parquet table (a real per-file layout would use foreachPartition
+    writers on a cluster filesystem)."""
     yolo_label_lines(labels).write.mode("overwrite").parquet(out_dir)
 
 

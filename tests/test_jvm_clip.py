@@ -260,6 +260,67 @@ def tiny(spark):
     return rasters, regions
 
 
+# a rectangle, a triangle and a polygon with a hole: one region per
+# clip arm (rect column math, hole-free S-H, hole-aware S-H)
+_HOLED_GEOMS = [
+    "POLYGON ((5 5, 50 5, 50 30, 5 30, 5 5))",
+    "POLYGON ((70 20, 120 35, 90 120, 70 20))",
+    "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
+    "(40 40, 60 40, 60 60, 40 60, 40 40))",
+]
+
+
+def _holed_inputs(spark):
+    """One 128×128 raster and the _HOLED_GEOMS regions over it."""
+    rasters = spark.createDataFrame(
+        [("R1_2019to2020_X", 128, 128, 64, 64,
+          {"a": 1.0, "b": 0.0, "c": 0.0, "d": 0.0, "e": -1.0, "f": 128.0})],
+        "doc_id string, width int, height int, tile_size int, "
+        "stride int, transform map<string,double>",
+    )
+    regions = spark.createDataFrame(
+        [("R1", 2019, 2020, "Treatment", g) for g in _HOLED_GEOMS],
+        "region string, start_year int, end_year int, "
+        "class_name string, geometry string",
+    )
+    return rasters, regions
+
+
+def _plan_string(df) -> str:
+    """``df``'s executed plan as explain() prints it, before any run."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _spatial_join_lines(plan: str) -> list[str]:
+    """The plan lines of the tile × region hash join (keyed on cell)."""
+    return [
+        line for line in plan.splitlines()
+        if "HashJoin [" in line and "cell#" in line
+    ]
+
+
+def _docs_out(spark, tiny, entry: str):
+    """docs_out of one entry point over the tiny inputs."""
+    from georip_spark import synth
+    from georip_spark.pipeline import build_dataset, from_docs
+
+    rasters, regions = tiny
+    if entry == "from_docs":
+        return from_docs(synth.synth_docs(spark, rasters), rasters, regions)["docs_out"]
+    bcast = entry == "build_dataset"
+    return build_dataset(rasters, regions, broadcast_regions=bcast)["docs_out"]
+
+
+def _assert_clip_once_after_join(plan: str) -> None:
+    """The spatial hash join's condition holds only the equi-keys plus
+    the bbox and reference-point tests, and the clip tree (the CASE
+    over the rect / S-H arms) appears exactly once in the plan."""
+    (join,) = _spatial_join_lines(plan)
+    assert "lambdafunction" not in join
+    assert "is_rect_blccw" not in join
+    assert plan.count("CASE WHEN is_rect_blccw#") == 1
+
+
 class TestPlanShape:
     def test_no_arrow_eval_without_holes(self, spark, tiny):
         """The hot build_labels stage must contain NO ArrowEvalPython
@@ -290,29 +351,13 @@ class TestPlanShape:
 
         from georip_spark.pipeline import build_dataset
 
-        rasters = spark.createDataFrame(
-            [("R1_2019to2020_X", 128, 128, 64, 64,
-              {"a": 1.0, "b": 0.0, "c": 0.0, "d": 0.0, "e": -1.0, "f": 128.0})],
-            "doc_id string, width int, height int, tile_size int, "
-            "stride int, transform map<string,double>",
-        )
-        geoms = [
-            "POLYGON ((5 5, 50 5, 50 30, 5 30, 5 5))",
-            "POLYGON ((70 20, 120 35, 90 120, 70 20))",
-            "POLYGON ((10 10, 100 10, 100 100, 10 100, 10 10), "
-            "(40 40, 60 40, 60 60, 40 60, 40 40))",
-        ]
-        regions = spark.createDataFrame(
-            [("R1", 2019, 2020, "Treatment", g) for g in geoms],
-            "region string, start_year int, end_year int, "
-            "class_name string, geometry string",
-        )
+        rasters, regions = _holed_inputs(spark)
         out = build_dataset(rasters, regions)
         stats = {
             r["geometry"]: (r["is_rect_blccw"], r["has_holes"])
             for r in out["regions_prepared"].collect()
         }
-        assert [stats[g] for g in geoms] == [
+        assert [stats[g] for g in _HOLED_GEOMS] == [
             (True, False), (False, False), (False, True)
         ]
         labels = out["labels"]
@@ -326,6 +371,52 @@ class TestPlanShape:
         kern = kernel_labels(
             out["tiles"], out["regions_prepared"], out["classes"]
         )
-        assert kern.select("geom_id").distinct().count() == len(geoms)
+        assert kern.select("geom_id").distinct().count() == len(_HOLED_GEOMS)
         slow = kern.select("media_ref", "label").collect()
         assert sorted(map(tuple, rows)) == sorted(map(tuple, slow))
+
+    @pytest.mark.parametrize(
+        "entry", ["build_dataset", "build_dataset_shuffle", "from_docs"]
+    )
+    def test_clips_once_after_join(self, spark, tiny, entry):
+        """The clip runs once per matched pair, after the join: a
+        filter on the clipped coords pushed into the hash join's
+        condition clipped every candidate twice and code-generated
+        the clip tree again per task."""
+        _assert_clip_once_after_join(_plan_string(_docs_out(spark, tiny, entry)))
+
+    @pytest.mark.parametrize("entry", ["build_dataset", "from_docs"])
+    def test_no_python_rdd_scan(self, spark, tiny, entry):
+        """The class map is a LocalRelation: a createDataFrame(list)
+        scan (ExistingRDD over a PythonRDD) started Python workers on
+        every action."""
+        assert "ExistingRDD" not in _plan_string(_docs_out(spark, tiny, entry))
+
+    def test_holed_shuffle_clips_once_after_join(self, spark):
+        """The three-arm clip (rect, S-H, hole-aware S-H) stays out of
+        the shuffled hash join's condition too."""
+        from georip_spark.pipeline import build_dataset
+
+        rasters, regions = _holed_inputs(spark)
+        out = build_dataset(rasters, regions, broadcast_regions=False)
+        plan = _plan_string(out["docs_out"])
+        assert "rings#" in plan
+        _assert_clip_once_after_join(plan)
+
+    def test_lineage_clips_once_after_join(self, spark, tiny, tmp_path):
+        """run_pipeline_with_lineage's docs stage is _plan's docs_out."""
+        from georip_spark.lineage import StageStore, run_pipeline_with_lineage
+
+        plans = {}
+
+        class RecordingStore(StageStore):
+            def run_stage(self, df, name, *args, **kwargs):
+                plans[name] = _plan_string(df)
+                return super().run_stage(df, name, *args, **kwargs)
+
+        rasters, regions = tiny
+        store = RecordingStore(str(tmp_path))
+        run_pipeline_with_lineage(spark, rasters, regions, store, n_buckets=2)
+        plan = plans["docs_out"]
+        _assert_clip_once_after_join(plan)
+        assert "ExistingRDD" not in plan

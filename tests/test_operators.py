@@ -291,6 +291,23 @@ class TestSources:
         assert out["bg.png"] == ""  # background → empty file
         assert out["mix.png"] == "0 0.3 0.3"  # background line never leaks
 
+    def test_write_yolo_labels_round_trip(self, spark, tmp_path):
+        """The sink writes exactly yolo_label_lines' rows."""
+        from georip_spark.sources.formats import write_yolo_labels, yolo_label_lines
+
+        df = spark.createDataFrame(
+            [("a.png", 1, "1 0.5 0.5"), ("a.png", 0, "0 0.1 0.2"),
+             ("bg.png", -1, None)],
+            "filename string, class_id int, label string",
+        )
+        out = str(tmp_path / "yolo")
+        write_yolo_labels(df, out)
+        back = spark.read.parquet(out)
+        assert back.columns == ["filename", "content"]
+        assert sorted(map(tuple, back.collect())) == sorted(
+            map(tuple, yolo_label_lines(df).collect())
+        )
+
     def test_yaml_manifest(self, tmp_path):
         from georip_spark.sources.formats import write_yaml_manifest
 

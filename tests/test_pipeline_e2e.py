@@ -4,6 +4,8 @@ The correctness invariant (BASELINE.json input_hint): per-row
 span-sequence equality on (kind, text, media_ref, order).
 """
 
+import itertools
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -265,10 +267,14 @@ def test_tiles_from_docs_respects_doc_table(spark, tiny):
     assert n_pruned < n_full
 
 
+_JOB_GROUPS = itertools.count()
+
+
 def _plan_jobs(spark, plan):
     """(plan(), the number of Spark jobs launched while it ran)."""
     sc = spark.sparkContext
-    group = f"plan-jobs-{id(plan)}"
+    # a fresh group per call: an id() of a freed callable is reused
+    group = f"plan-jobs-{next(_JOB_GROUPS)}"
     sc.setJobGroup(group, group)
     try:
         out = plan()
@@ -291,6 +297,28 @@ def stored(spark, tiny, tmp_path_factory):
     for name, df in tables.items():
         df.write.parquet(str(root / name))
     return {name: spark.read.parquet(str(root / name)) for name in tables}
+
+
+def test_auto_salt_reads_histogram_once(spark, stored):
+    """salt="auto" reads the build side's join-key histogram with ONE
+    dim-side aggregate, so the dim's WKT stats parse below it runs
+    once: under AQE that aggregate is at most 4 jobs on top of the
+    plain shuffle plan's own. Reading the total and the hot keys as
+    two aggregates took 7."""
+    def plain():
+        return build_dataset(
+            stored["rasters"], stored["regions"], broadcast_regions=False
+        )
+
+    def auto():
+        return build_dataset(
+            stored["rasters"], stored["regions"], salt="auto",
+            broadcast_regions=False,
+        )
+
+    _, base = _plan_jobs(spark, plain)
+    _, jobs = _plan_jobs(spark, auto)
+    assert jobs - base <= 4
 
 
 class TestZeroJobPlanning:
