@@ -1163,11 +1163,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q35_holed_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hole-aware clip + largest-part selection, driver-gated (round-4
-    session 5; jvm_clip.clip_normalize_coords_mp over
-    jvm_wkt.rings_expr — the all-JVM hot-path arm for holed
-    geometries). Deterministic fixtures from `documents`: per doc i, a
-    MULTIPOLYGON of part A = rect shell with a rect hole (key =
+    """Hole-aware clip + largest-part selection, driver-gated
+    (jvm_clip.clip_normalize_coords over the `rings` of
+    jvm_wkt.attach_stats — the pipeline's general clip arm, fed by its
+    dim-side WKT parse). Deterministic fixtures from `documents`: per
+    doc i, a MULTIPOLYGON of part A = rect shell with a rect hole (key =
     wa·ha − hw·hh) and part B = solid rect (key = wb·hb), everything
     strictly inside the 100×100 tile with integer coords, so DuckDB
     derives the winner and its normalized closed shell from pure
@@ -1212,12 +1212,12 @@ def q35_holed_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(60) + F.col("wb"), F.lit(60) + F.col("wb"),
         F.lit(60) + F.col("hb"), F.lit(60) + F.col("hb"),
     )
-    coords = jvm_clip.clip_normalize_coords_mp(
-        jvm_wkt.rings_expr(wkt),
-        F.lit(0.0), F.lit(0.0), F.lit(100.0), F.lit(100.0),
+    coords = jvm_clip.clip_normalize_coords(
+        F.col("rings"), F.lit(0.0), F.lit(0.0), F.lit(100.0), F.lit(100.0),
     )
+    stats = jvm_wkt.attach_stats(p.select("doc_id", wkt.alias("geometry")))
     return (
-        p.select("doc_id", F.posexplode(coords).alias("pos", "val"))
+        stats.select("doc_id", F.posexplode(coords).alias("pos", "val"))
         .select("doc_id", F.col("pos").cast("long").alias("pos"), "val")
         .orderBy("doc_id", "pos")
     )

@@ -260,11 +260,9 @@ def png_decode(data: bytes) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 def sniff(payload: bytes) -> str | None:
-    """Identify a payload by magic bytes: 'png' | 'jpeg' | 'avi' | None."""
+    """Identify a payload by magic bytes: 'png' | 'jpeg' | None."""
     if payload[:8] == _PNG_SIG:
         return "png"
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return "avi"
     if payload[:3] == b"\xff\xd8\xff":
         return "jpeg"
     return None

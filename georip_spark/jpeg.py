@@ -20,9 +20,8 @@ Scope (disclosed):
 Reference parity: the reference never parses JPEG itself (it reads
 GeoTIFF via GDAL and writes PNG via skimage —
 ``georip/raster/conversion.py:12-36``). No pipeline, benchmark or
-job code imports this module; it stays only for ``avi.py`` and its
-own tests, and is slated for retirement (README "What the engine
-keeps").
+job code imports this module; it stays only for its own tests, and
+is slated for retirement (README "What the engine keeps").
 
 Scale notes: per-item work on chip-sized payloads. The DCT/quantize/dequant/IDCT stages
 are vectorized numpy over all blocks at once; only the entropy

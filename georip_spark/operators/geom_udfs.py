@@ -34,13 +34,13 @@ _BOUNDS_SCHEMA = T.StructType(
         T.StructField("is_valid", T.BooleanType()),
         T.StructField("area", T.DoubleType()),
         T.StructField("is_rect_blccw", T.BooleanType()),
-        # per-part shell rings (unclosed, interleaved x0,y0,x1,y1,…) —
-        # parsed ONCE on the dim side so the JVM clip fast path never
-        # needs the WKT string (or any Python) on the fact-sized pair
-        # stream; has_holes gates the rows that take the hole-aware
-        # JVM clip (jvm_clip.clip_normalize_coords_mp)
-        T.StructField("shells", T.ArrayType(T.ArrayType(T.DoubleType()))),
-        T.StructField("has_holes", T.BooleanType()),
+        # per polygon, per ring (shell first, then holes), each ring
+        # unclosed and interleaved x0,y0,x1,y1,… — parsed ONCE on the
+        # dim side, so the JVM clip (jvm_clip.clip_normalize_coords)
+        # never needs the WKT string on the fact-sized pair stream
+        T.StructField(
+            "rings", T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
+        ),
     ]
 )
 
@@ -69,8 +69,8 @@ def _is_rect_blccw(mp) -> bool:
     )
 
 
-def _unclosed_shell(ring) -> list[float]:
-    """Shell vertices with the closing point stripped (the EXACT
+def _unclosed_ring(ring) -> list[float]:
+    """Ring vertices with the closing point stripped (the EXACT
     precondition clip_ring_to_rect applies: drop ring[-1] iff it
     equals ring[0]), flattened [x0, y0, x1, y1, …] for a compact
     Arrow array column."""
@@ -98,19 +98,18 @@ def geom_bounds(geom_wkt: pd.Series) -> pd.DataFrame:
     for mp in _memo_parse(geom_wkt):
         if not mp:
             rows.append((np.nan, np.nan, np.nan, np.nan, True, False, 0.0,
-                         False, [], False))
+                         False, []))
         else:
             b = kernels.bounds(mp)
             rows.append(
                 (*b, False, any(kernels.is_valid_polygon(p) for p in mp),
                  kernels.multipolygon_area(mp), _is_rect_blccw(mp),
-                 [_unclosed_shell(p[0]) for p in mp if p],
-                 any(len(p) > 1 for p in mp))
+                 [[_unclosed_ring(r) for r in p] for p in mp])
             )
     return pd.DataFrame(
         rows,
         columns=["minx", "miny", "maxx", "maxy", "is_empty", "is_valid",
-                 "area", "is_rect_blccw", "shells", "has_holes"],
+                 "area", "is_rect_blccw", "rings"],
     )
 
 

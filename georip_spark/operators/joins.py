@@ -54,8 +54,6 @@ def auto_res(
 
     Input: any DataFrame with minx/miny/maxx/maxy columns (e.g. the
     output of prepare_regions, or raw bbox stats)."""
-    import math
-
     row = (
         regions_stats.filter(F.col("minx").isNotNull())
         .select(
@@ -369,7 +367,6 @@ def _knn_small_right(
     ladder's cell math makes on its hot path). Output schema and
     column order mirror the ladder: left.*, right.*, dist, rn."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.types import (
         DoubleType, IntegerType, StructField, StructType,
     )

@@ -1,6 +1,6 @@
 """General polygon ∩ tile-rect clip + normalize as PURE Catalyst
 column math — the whole-stage JVM replacement for the Arrow clip
-kernel on arbitrary (hole-free) polygons, not just rectangles.
+kernel on arbitrary polygons and multipolygons, holed or not.
 
 Why: the N→4N scaling profile (NOTES.md)
 shows the Arrow/Python lane is the one part of the hot stage that
@@ -8,10 +8,12 @@ does not scale with cores — its effective bandwidth saturates while
 pure-JVM stages track the hardware ceiling. The rect fast path
 (pipeline._rect_clip_coords) removed ArrowEvalPython for canonical
 rectangles (~40% of the synth corpus); this module removes it for
-EVERY hole-free geometry by re-expressing kernels.clip_ring_to_rect
+every other geometry by re-expressing kernels.clip_ring_to_rect
 (Sutherland–Hodgman against an axis-aligned window) with Spark
-higher-order functions over per-part shell arrays parsed once on the
-dim side (geom_udfs.geom_bounds emits `shells`).
+higher-order functions over the nested ring arrays the dim side's one
+WKT parse emits (jvm_wkt.geom_stats_struct's `rings`). Shells and
+holes share one S-H subtree, so a holed dim plans the same clip
+expression as a hole-free one.
 
 Bit-compatibility contract with the kernel (the e2e oracle and the
 hybrid plan both demand row-identical output):
@@ -24,8 +26,8 @@ hybrid plan both demand row-identical output):
   `aggregate` reproduces it bit-for-bit; np.sum's pairwise order
   cannot be mirrored) against tol = 4·len(closed)·eps·max(1,ext)²;
 - largest-part selection uses the same fold (kernels.
-  clip_selection_area) with strictly-greater replacement, so Python's
-  first-wins tie behavior is preserved;
+  clip_selection_area: |shell| − Σ|holes|) with strictly-greater
+  replacement, so Python's first-wins tie behavior is preserved;
 - normalization clips to [0,1] and rounds half-even via the
   branch-free (s+2^52)−2^52 rint — the janino-safe idiom from the
   rect path (a CASE version overflowed codegen; NOTES.md round 4).
@@ -155,24 +157,24 @@ def _finish(p4: Column) -> Column:
     return F.struct(ok.alias("ok"), p4.alias("ring"), area.alias("area"))
 
 
-def _to_pts(shell: Column) -> Column:
+def _to_pts(ring: Column) -> Column:
     """Flat [x0,y0,x1,y1,…] → array<struct<x,y>>."""
     return F.transform(
-        F.sequence(F.lit(0), (F.size(shell) / 2).cast("int") - 1),
+        F.sequence(F.lit(0), (F.size(ring) / 2).cast("int") - 1),
         lambda i: F.struct(
-            F.get(shell, 2 * i).alias("x"), F.get(shell, 2 * i + 1).alias("y")
+            F.get(ring, 2 * i).alias("x"), F.get(ring, 2 * i + 1).alias("y")
         ),
     )
 
 
-def _clip_shell(
-    shell: Column, minx: Column, miny: Column, maxx: Column, maxy: Column
+def _clip_ring(
+    ring: Column, minx: Column, miny: Column, maxx: Column, maxy: Column
 ) -> Column:
-    """Flat UNCLOSED shell → candidate struct (ok, ring, area) after
+    """Flat UNCLOSED ring → candidate struct (ok, ring, area) after
     the kernel's four half-plane passes in the kernel's order:
     x≥minx, x≤maxx, y≥miny, y≤maxy."""
     return _let(
-        _to_pts(shell),
+        _to_pts(ring),
         lambda p0: _let(
             _sh_pass(p0, 0, minx, True),
             lambda p1: _let(
@@ -204,59 +206,6 @@ def _norm_closed_ring(
 
 
 def clip_normalize_coords(
-    shells: Column,
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
-    g_bbox: tuple[Column, Column, Column, Column] | None = None,
-) -> Column:
-    """JVM mirror of geom_udfs.clip_and_normalize for HOLE-FREE
-    geometries: clip every part's shell to the tile rect, drop parts
-    failing the zero-area floor, keep the largest |area| part (first
-    wins ties — strictly-greater replacement, matching Python max),
-    and emit its CLOSED ring normalized to tile space
-    [u0, v0, u1, v1, …], rounded half-even to 6. Null when every part
-    clips away (same contract as the kernel: the caller filters).
-
-    g_bbox=(g_minx, g_miny, g_maxx, g_maxy): optional region bbox.
-    When the whole geometry sits inside the tile, every S-H pass is
-    the identity (each vertex inside, no crossings — the kernel emits
-    the original vertex values), so the four passes are skipped and
-    only the zero-area floor + normalize run. Bit-identical either
-    way; this is the common case when regions are small relative to
-    tiles."""
-    w = maxx - minx
-    h = maxy - miny
-    if g_bbox is not None:
-        gx0, gy0, gx1, gy1 = g_bbox
-        inside = (
-            (gx0 >= minx) & (gx1 <= maxx) & (gy0 >= miny) & (gy1 <= maxy)
-        )
-        clip_one = lambda sh: F.when(  # noqa: E731
-            inside, _let(_to_pts(sh), _finish)
-        ).otherwise(_clip_shell(sh, minx, miny, maxx, maxy))
-    else:
-        clip_one = lambda sh: _clip_shell(sh, minx, miny, maxx, maxy)  # noqa: E731
-    cands = F.filter(
-        F.transform(shells, clip_one),
-        lambda c: c["ok"],
-    )
-
-    return F.aggregate(
-        cands,
-        F.lit(None).cast(_CAND_TYPE),
-        lambda acc, c: F.when(
-            acc.isNull() | (F.abs(c["area"]) > F.abs(acc["area"])), c
-        ).otherwise(acc),
-        lambda acc: F.when(
-            acc.isNotNull(),
-            _norm_closed_ring(acc["ring"], minx, maxy, w, h),
-        ),
-    )
-
-
-def clip_normalize_coords_mp(
     rings: Column,
     minx: Column,
     miny: Column,
@@ -264,28 +213,34 @@ def clip_normalize_coords_mp(
     maxy: Column,
     g_bbox: tuple[Column, Column, Column, Column] | None = None,
 ) -> Column:
-    """Hole-AWARE JVM mirror of geom_udfs.clip_and_normalize: the input
-    is the full nested ring structure (per polygon: shell first, then
-    holes; each ring flat UNCLOSED [x0,y0,…] — jvm_wkt.rings_expr).
+    """JVM mirror of geom_udfs.clip_and_normalize on any polygon or
+    multipolygon, holed or not. ``rings`` is the stats struct's nested
+    ring array (per polygon: shell first, then holes; each ring flat
+    UNCLOSED [x0,y0,…] — jvm_wkt.geom_stats_struct).
 
     Kernel semantics mirrored exactly (kernels.clip_multipolygon_to_rect
     + clip_selection_area + geom_udfs.clip_and_normalize):
-    - every ring (shell AND hole) is clipped by the same four-pass S-H
-      with the same zero-area floor; a polygon whose SHELL clips away
-      is dropped whole; a hole that clips away just stops subtracting;
+    - every ring (shell AND hole) goes through the same four-pass S-H
+      and zero-area floor (one ``clip_one`` in the tree); a polygon
+      whose SHELL clips away is dropped whole, a hole that clips away
+      just stops subtracting;
     - the selection key is |shell| − Σ|holes| over the CLIPPED rings
-      (kernels.clip_selection_area — signed sequential ring-local
-      shoelace, so both paths agree on last-ULP near-ties). Unlike the
-      hole-free path the key can be NEGATIVE (holes bigger than the
-      surviving shell), so the max compares the key DIRECTLY — which
-      for hole-free parts (key = |area|) is the same ordering the
-      hole-free path's abs-compare produces;
+      (kernels.clip_selection_area, holes in declaration order). It
+      can be NEGATIVE (holes bigger than the surviving shell), so the
+      max compares the key directly; for a hole-free part the key is
+      |area|;
     - first-wins ties via strictly-greater replacement (Python max);
-    - output = the winning polygon's SHELL, closed + normalized.
+    - output = the winning polygon's SHELL, closed, normalized to tile
+      space [u0, v0, u1, v1, …] and rounded half-even to 6. Null when
+      every polygon clips away (the caller filters).
 
-    g_bbox: same whole-geometry-inside-tile shortcut as the hole-free
-    path — the stats bounds cover every ring's vertices (shell and
-    holes), so `inside` makes every ring's clip the identity."""
+    g_bbox=(g_minx, g_miny, g_maxx, g_maxy): optional region bbox.
+    The stats bounds cover every ring's vertices, so when the whole
+    geometry sits inside the tile every S-H pass is the identity (each
+    vertex inside, no crossings — the kernel emits the original vertex
+    values): the four passes are skipped and only the zero-area floor
+    runs. Bit-identical either way; the common case when regions are
+    small relative to tiles."""
     w = maxx - minx
     h = maxy - miny
     if g_bbox is not None:
@@ -295,46 +250,33 @@ def clip_normalize_coords_mp(
         )
         clip_one = lambda r: F.when(  # noqa: E731
             inside, _let(_to_pts(r), _finish)
-        ).otherwise(_clip_shell(r, minx, miny, maxx, maxy))
+        ).otherwise(_clip_ring(r, minx, miny, maxx, maxy))
     else:
-        clip_one = lambda r: _clip_shell(r, minx, miny, maxx, maxy)  # noqa: E731
+        clip_one = lambda r: _clip_ring(r, minx, miny, maxx, maxy)  # noqa: E731
 
-    def clip_poly(poly: Column) -> Column:
-        def body(shell_c: Column) -> Column:
-            holes = F.slice(poly, 2, F.greatest(F.size(poly) - 1, F.lit(0)))
-            # kernel subtraction order: holes in declaration order,
-            # each |seq area|; floor-failing holes contribute nothing
-            key = F.aggregate(
-                holes,
-                F.abs(shell_c["area"]),
-                lambda acc, hr: acc
-                - _let(
-                    clip_one(hr),
-                    lambda hc: F.when(
-                        hc["ok"], F.abs(hc["area"])
-                    ).otherwise(F.lit(0.0)),
-                ),
-            )
-            return F.struct(
-                shell_c["ok"].alias("ok"),
-                shell_c["ring"].alias("ring"),
-                key.alias("area"),
-            )
-
-        # kernel skips ring-less polygons outright (`if poly else
-        # None`); null candidates fall out of the ok-filter below
-        return F.when(
-            F.size(poly) > 0, _let(clip_one(F.get(poly, 0)), body)
-        ).otherwise(F.lit(None).cast(_CAND_TYPE))
+    def keyed(clipped: Column) -> Column:
+        # a ring-less polygon has a null shell: its null `ok` drops it
+        shell = F.get(clipped, 0)
+        key = F.aggregate(
+            F.slice(clipped, 2, F.greatest(F.size(clipped) - 1, F.lit(0))),
+            F.abs(shell["area"]),
+            lambda acc, hc: acc
+            - F.when(hc["ok"], F.abs(hc["area"])).otherwise(F.lit(0.0)),
+        )
+        return F.struct(
+            shell["ok"].alias("ok"), shell["ring"].alias("ring"),
+            key.alias("area"),
+        )
 
     cands = F.filter(
-        F.transform(rings, clip_poly),
+        F.transform(
+            rings, lambda poly: _let(F.transform(poly, clip_one), keyed)
+        ),
         lambda c: c["ok"],
     )
     return F.aggregate(
         cands,
         F.lit(None).cast(_CAND_TYPE),
-        # DIRECT key compare (key may be negative; see docstring)
         lambda acc, c: F.when(
             acc.isNull() | (c["area"] > acc["area"]), c
         ).otherwise(acc),

@@ -3,7 +3,7 @@ replacement for the `geom_bounds` pandas UDF on the dim-prepare path.
 
 Why: after the general JVM clip (operators/jvm_clip.py) landed, the
 one Python stage left on the pipeline's hot path was prepare_regions'
-`geom_bounds` pass — a WKT parse + bounds/area/shells pass over the
+`geom_bounds` pass — a WKT parse + bounds/area/rings pass over the
 whole dim side (~19 s at 8 cores over 768k regions in the n=256k
 scaling profile, scaling at only 2.7x). This module re-expresses that
 pass with string splits and higher-order functions that run entirely
@@ -27,8 +27,11 @@ from engine-serialized WKT, all property-swept in test_jvm_wkt):
 - coordinate tokens 'inf'/'nan' parse via Python float() but cast to
   NULL here → EMPTY row (safer than propagating non-finite geometry);
 - exotic malformed fragments that the depth parser happens to accept
-  differently — both sides still converge to the EMPTY row on every
-  malformed case in the sweep.
+  differently. Every malformed case in the sweep converges to the
+  EMPTY row on both sides, but not every malformed string does:
+  'POLYGON ((0 0, 4 0, 4 4, 0 0 9)), (1 1, 2 1, 2 2, 1 1))' (a stray
+  ')' in an ignored third coordinate token) is EMPTY in Python and a
+  valid holed polygon here.
 
 Bit-compatibility: the shoelace folds are STRICTLY SEQUENTIAL left
 folds (kernels.seq_ring_area order: acc + (x_i*y_j - x_j*y_i)), not
@@ -77,24 +80,6 @@ def _parse_point(body: Column) -> Column:
 def _collapse_ws(wkt: Column) -> Column:
     """Drop the whitespace around structural characters '(' ')' ','."""
     return F.regexp_replace(wkt, r"\s*([(),])\s*", "$1")
-
-
-# A ring separator '),(' that is not the polygon separator ')),((':
-# its left flank is not ')' or its right flank is not '('.
-_RING_SEP_RE = r"[^)]\),\(|\),\([^(]"
-
-
-def may_have_holes(wkt_col: Column) -> Column:
-    """Text pre-test for holed WKT, without the parse: true wherever
-    geom_stats_struct's ``is_valid & has_holes`` is. A holed row has a
-    polygon piece (after the ')),((' split) that splits on '),(' into
-    rings whose coordinates all cast. Inside the piece a separator has
-    a coordinate character on its left (no piece contains ')),(('); at
-    the piece's start its left flank is the '(' of the polygon
-    separator or of the outer '((', at its end its right flank is a
-    ')'. False on hole-free polygons and multipolygons; null for a
-    null WKT."""
-    return _collapse_ws(wkt_col).rlike(_RING_SEP_RE)
 
 
 def _parse_poly_body(mpbody: Column) -> Column:
@@ -215,34 +200,14 @@ def _unclosed(ring: Column) -> Column:
     ).otherwise(ring)
 
 
-def rings_expr(wkt_col: Column) -> Column:
-    """Full nested ring structure for the hole-aware JVM clip
-    (jvm_clip.clip_normalize_coords_mp): per polygon, per ring (shell
-    first, then holes — WKT declaration order, the kernel's hole
-    subtraction order), flat UNCLOSED interleaved [x0,y0,…] — the same
-    per-ring layout `shells` uses. Empty/malformed WKT → empty array.
-
-    Computed from its own parse (one extra dim-side pass); the
-    pipeline evaluates it only under a `has_holes` CASE arm, so
-    hole-free rows never pay it."""
-    return F.transform(
-        parse_mp_expr(wkt_col),
-        lambda poly: F.transform(
-            poly,
-            lambda r: F.flatten(
-                F.transform(_unclosed(r), lambda p: F.array(p["x"], p["y"]))
-            ),
-        ),
-    )
-
-
 def geom_stats_struct(wkt_col: Column) -> Column:
     """The full geom_bounds output struct (geom_udfs._BOUNDS_SCHEMA)
     from a WKT column, all-JVM. Field-for-field contract:
     minx/miny/maxx/maxy (null when empty), is_empty, is_valid
     (any poly: closed ≥4-pt shell with nonzero area), area
-    (Σ |shell|−Σ|holes|), is_rect_blccw, shells (per-poly unclosed
-    shell, interleaved x0,y0,…), has_holes."""
+    (Σ |shell|−Σ|holes|), is_rect_blccw, rings (per polygon, per
+    ring — shell first, then holes in WKT order — each ring flat,
+    UNCLOSED, interleaved x0,y0,…: the jvm_clip input)."""
 
     def build(mp: Column) -> Column:
         def stats(pts: Column) -> Column:
@@ -270,16 +235,15 @@ def geom_stats_struct(wkt_col: Column) -> Column:
                 & (F.abs(_seq_shoelace(shell)) > F.lit(0.0)),
             ),
         )
-        shells = F.transform(
-            F.filter(mp, lambda poly: F.size(poly) > 0),
-            lambda poly: F.flatten(
-                F.transform(
-                    _unclosed(F.get(poly, 0)),
-                    lambda p: F.array(p["x"], p["y"]),
-                )
+        rings = F.transform(
+            mp,
+            lambda poly: F.transform(
+                poly,
+                lambda r: F.flatten(
+                    F.transform(_unclosed(r), lambda p: F.array(p["x"], p["y"]))
+                ),
             ),
         )
-        has_holes = F.exists(mp, lambda poly: F.size(poly) > 1)
         null_d = F.lit(None).cast("double")
         return F.struct(
             F.when(empty, null_d).otherwise(b["minx"]).alias("minx"),
@@ -292,17 +256,14 @@ def geom_stats_struct(wkt_col: Column) -> Column:
             F.when(empty, F.lit(False))
             .otherwise(_is_rect_blccw_expr(mp))
             .alias("is_rect_blccw"),
-            F.when(empty, F.array().cast("array<array<double>>"))
-            .otherwise(shells)
-            .alias("shells"),
-            F.when(empty, F.lit(False)).otherwise(has_holes).alias("has_holes"),
+            rings.alias("rings"),
         )
 
     return _let(parse_mp_expr(wkt_col), build)
 
 
 def attach_stats(df: DataFrame, geom_col: str = "geometry") -> DataFrame:
-    """df + the ten ``geom_stats_struct`` columns, all-JVM (the tests'
+    """df + the nine ``geom_stats_struct`` columns, all-JVM (the tests'
     Arrow oracle is geom_udfs.geom_bounds). The struct is expanded
     through F.inline (a Generate node), which evaluates the parse ONCE
     per row and is a hard CollapseProject boundary — `.select('_g.minx',

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from georip_spark import functions as GF
 from georip_spark.exprcache import cached_column
-from georip_spark.operators import geom_udfs, jvm_clip, jvm_wkt
+from georip_spark.operators import geom_udfs, jvm_clip
 from georip_spark.operators.joins import (
     DEFAULT_RES,
     auto_res,
@@ -173,32 +173,21 @@ def _plan(
     and grid resolution, the dim-side class pre-filter, prepare_regions,
     build_labels and assemble_docs.
 
-    Planning launches no fact-side job and one dim-side job: a single
-    aggregate over the raw regions scan answers both questions the
-    plan asks of the dim.
-    - Whether a kept-class region may be holed (_any_holed, a text
-      test on the WKT). Only then is the hole-aware clip arm planned.
-    - With broadcast_regions=None, the region count: Catalyst's size
-      stats misestimate WKT-string tables badly (an auto-broadcast
-      OOM'd the driver at 384k regions), so the regime is chosen from
-      real cardinality — broadcast under 500k regions (~100-250 MB
-      hash relation), a shuffle-hash join above.
+    Planning launches no fact-side job. With broadcast_regions=None it
+    runs one dim-side job, the region count: Catalyst's size stats
+    misestimate WKT-string tables badly (an auto-broadcast OOM'd the
+    driver at 384k regions), so the regime is chosen from real
+    cardinality — broadcast under 500k regions (~100-250 MB hash
+    relation), a shuffle-hash join above. Given broadcast_regions,
+    planning runs no job at all.
 
     res=None picks the regime-adaptive default (PIPELINE_RES_* above);
     res="auto" resolves it from the dim's actual geometry extents
     (auto_res, one more dim-side job). The output is res-invariant
     (cells only generate candidates; the clip decides) — res tunes
     candidate fan-out, not results."""
-    kept = _kept_names(keep_classes)
-    probes = [
-        _any_holed(F.when(F.col("class_name").isin(kept), F.col("geometry")))
-        .alias("holed")
-    ]
     if broadcast_regions is None:
-        probes.append(F.count("*").alias("n"))
-    dim = regions.agg(*probes).first()
-    if broadcast_regions is None:
-        broadcast_regions = dim["n"] <= 500_000
+        broadcast_regions = regions.count() <= 500_000
     if res is None:
         res = (
             PIPELINE_RES_BROADCAST if broadcast_regions
@@ -212,11 +201,12 @@ def _plan(
     # profile). A column-preserving filter, so geom_id hashes the
     # caller's region columns; build_labels attaches class_id.
     prepared = prepare_regions(
-        regions.filter(F.col("class_name").isin(kept)), res=res,
+        regions.filter(F.col("class_name").isin(_kept_names(keep_classes))),
+        res=res,
     )
-    labels = _labels(
+    labels = build_labels(
         tiles, prepared, classes, res, salt, broadcast_regions,
-        derive_tile_refs, dim["holed"],
+        derive_tile_refs,
     )
     return {
         "tiles": tiles,
@@ -344,21 +334,16 @@ def build_labels(
     and Background rows dropped (A10/S12 empty-file semantics).
 
     salt is an int factor for hot cells or "auto" (per-key salting
-    decided from a sample of the build side), see
-    spatial_join_tiles_regions.
+    decided from one aggregate over the build side's join-key
+    histogram), see spatial_join_tiles_regions.
 
-    The clip is JVM column math for every input shape: canonical
-    rectangles take closed-form math, other hole-free geometries the
-    Sutherland–Hodgman clip over their shells. It runs once per
-    matched pair, after the join: the hash join's condition holds only
-    the equi-keys and the bbox and reference-point tests. One
-    dim-side aggregate (_any_holed, a text test over
-    regions_prepared.geometry; _plan folds it into its own dim job
-    instead) asks whether any region may be holed; only then does the
-    plan add a third, hole-aware arm over the full ring arrays — it is
-    the only arm correct on holed input, and planning it for a
-    hole-free dim made the benchmark action ~1.5× slower, so it is
-    planned from observed data.
+    The clip is JVM column math with two arms: canonical rectangles
+    take closed-form math, every other geometry — holed or not — the
+    hole-aware Sutherland–Hodgman clip over its ring arrays
+    (jvm_clip.clip_normalize_coords). It runs once per matched pair,
+    after the join: the hash join's condition holds only the equi-keys
+    and the bbox and reference-point tests. Planning it launches no
+    Spark job.
 
     derive_tile_refs (guide §2.3 "shuffle fewer bytes", round 6): the
     caller asserts media_ref == tile_media_ref(doc_id, tile_row,
@@ -375,34 +360,6 @@ def build_labels(
     join keys after the join. Broadcast joins skip the rewrite — there
     is no probe exchange to slim, and reconstruction would run per
     MATCHED row (~2.6× per tile)."""
-    holed = regions_prepared.agg(_any_holed(F.col("geometry"))).first()[0]
-    return _labels(
-        tiles, regions_prepared, classes, res, salt, broadcast_regions,
-        derive_tile_refs, holed,
-    )
-
-
-def _any_holed(geometry: Column) -> Column:
-    """Aggregate: whether any WKT in ``geometry`` may be holed
-    (jvm_wkt.may_have_holes, a superset of ``is_valid & has_holes``
-    read from the text without the stats parse). A dim whose only
-    holed regions are invalid therefore plans the hole-aware arm too:
-    correct, just slower than the two-way CASE."""
-    return F.coalesce(F.max(jvm_wkt.may_have_holes(geometry)), F.lit(False))
-
-
-def _labels(
-    tiles: DataFrame,
-    regions_prepared: DataFrame,
-    classes: DataFrame,
-    res: int,
-    salt: int | str | None,
-    broadcast_regions: bool | None,
-    derive_tile_refs: bool,
-    holed: bool,
-) -> DataFrame:
-    """build_labels with the holed answer given: plans the hole-aware
-    clip arm iff ``holed``, and the clip once, after the join."""
     tiles_keyed = _keyed(tiles)
     derive = bool(derive_tile_refs) and not broadcast_regions
     if derive:
@@ -414,23 +371,7 @@ def _labels(
             F.when(F.col("doc_id") == rebuild, F.lit(None).cast("string"))
             .otherwise(F.col("doc_id")),
         ).drop("doc_id", "media_ref")
-    # holed geometries need the hole-aware clip (jvm_clip.…_mp, which
-    # wants the full nested ring arrays)
-    if holed:
-        # nested ring arrays, materialized dim-side for holed rows
-        # only (the CASE arm keeps hole-free rows from paying the
-        # second parse); invalid rows are Backgrounded before the clip
-        regions_prepared = regions_prepared.withColumn(
-            "rings",
-            cached_column(
-                ("pipeline.rings", "geometry"),
-                lambda: F.when(
-                    F.col("is_valid") & F.col("has_holes"),
-                    jvm_wkt.rings_expr(F.col("geometry")),
-                ),
-            ),
-        )
-    # Every clip arm is JVM column math over the shells / rings arrays,
+    # Both clip arms are JVM column math over the bbox / rings arrays,
     # so the WKT string — the fattest dim column — is dead weight after
     # the join; area / is_empty / geom_id are never read after it
     # either (is_empty already zeroed the cover; class encoding keys on
@@ -464,13 +405,13 @@ def _labels(
         # `>= 0` pair: it kept rows whose is_valid was true OR null
         regions_prepared.filter(F.col("is_valid").isNull() | F.col("is_valid"))
     )
-    # canonical rectangles never read their shell array (the
-    # closed-form rect path wins the CASE) — null it dim-side so
+    # canonical rectangles never read their ring arrays (the
+    # closed-form rect path wins the CASE) — null them dim-side so
     # the broadcast/shuffle relation stays skinny for the dominant
     # row class (guide §2.3 "project before the exchange")
     regions_prepared = regions_prepared.withColumn(
-        "shells",
-        F.when(~F.col("is_rect_blccw"), F.col("shells")),
+        "rings",
+        F.when(~F.col("is_rect_blccw"), F.col("rings")),
     )
     # refine=False: the clip paths below null empty intersections, so
     # the separate exact-intersects Python pass would be redundant work
@@ -509,40 +450,23 @@ def _labels(
     # (georip/datasets/utils.py:357-371) both moved DIM-side above:
     # class_id arrives attached and every joined row already satisfies
     # class_id >= 0 with a valid geometry.
-    # The rect fast path and the S-H trees are built from FIXED column
-    # names, so the (expensive, py4j-built) Columns are memoized — see
+    # The rect fast path and the S-H tree are built from FIXED column
+    # names, so the (expensive, py4j-built) Column is memoized — see
     # exprcache module docstring for the measured driver-second costs
-    # this removes from every re-plan. All arms are bit-identical to
+    # this removes from every re-plan. Both arms are bit-identical to
     # the Arrow kernel (geom_udfs.clip_and_normalize, the tests' parity
     # oracle), so the hot stage has NO ArrowEvalPython for any input.
-    coords = F.when(
-        F.col("is_rect_blccw"),
-        cached_column(("pipeline.rect_clip",), _rect_clip_coords),
-    )
-    gen = cached_column(
-        ("pipeline.gen_clip",),
-        lambda: jvm_clip.clip_normalize_coords(
-            F.col("shells"), F.col("minx"), F.col("miny"),
-            F.col("maxx"), F.col("maxy"),
-            g_bbox=(F.col("g_minx"), F.col("g_miny"),
-                    F.col("g_maxx"), F.col("g_maxy")),
-        ),
-    )
-    if holed:
-        # holed rows: hole-aware S-H over the full ring arrays (largest
-        # |shell|−Σ|holes| part selection, jvm_clip.…_mp)
-        gen_mp = cached_column(
-            ("pipeline.gen_clip_mp",),
-            lambda: jvm_clip.clip_normalize_coords_mp(
+    coords = cached_column(
+        ("pipeline.clip",),
+        lambda: F.when(F.col("is_rect_blccw"), _rect_clip_coords()).otherwise(
+            jvm_clip.clip_normalize_coords(
                 F.col("rings"), F.col("minx"), F.col("miny"),
                 F.col("maxx"), F.col("maxy"),
                 g_bbox=(F.col("g_minx"), F.col("g_miny"),
                         F.col("g_maxx"), F.col("g_maxy")),
-            ),
-        )
-        coords = coords.when(~F.col("has_holes"), gen).otherwise(gen_mp)
-    else:
-        coords = coords.otherwise(gen)
+            )
+        ),
+    )
     # The Generate is a barrier that keeps the clip ONCE, after the
     # join: a filter on a Generate's output is never pushed below it,
     # and InferFiltersFromGenerate skips a CreateArray child. Without
@@ -553,7 +477,7 @@ def _labels(
     labeled = joined.select(
         "*", F.explode(F.array(coords)).alias("coords")
     ).drop(
-        "g_minx", "g_miny", "g_maxx", "g_maxy", "shells", "has_holes", "rings",
+        "g_minx", "g_miny", "g_maxx", "g_maxy", "rings",
     )
     labeled = labeled.filter(F.col("coords").isNotNull())
     # drop degenerate clipped slivers: reference prunes sparse

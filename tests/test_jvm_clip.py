@@ -1,7 +1,9 @@
 """General JVM Sutherland–Hodgman clip (operators/jvm_clip.py): must
-be bit-identical to the Arrow kernel on arbitrary hole-free
-geometries, and must remove ArrowEvalPython from the build_labels
-plan whenever no valid region has holes."""
+be bit-identical to the Arrow kernel on arbitrary geometries, holed
+or not, and the pipeline must plan one clip expression, with no
+ArrowEvalPython, whatever the dim holds."""
+
+import re
 
 import numpy as np
 import pytest
@@ -70,7 +72,7 @@ class TestJvmClipParity:
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("kern"),
             jvm_clip.clip_normalize_coords(
-                F.col("shells"), F.col("tminx"), F.col("tminy"),
+                F.col("rings"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
                 # production shape: region bbox gates the inside-tile
                 # shortcut arm (attach_stats bounds)
@@ -107,7 +109,7 @@ class TestJvmClipParity:
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("kern"),
             jvm_clip.clip_normalize_coords(
-                F.col("shells"), F.col("tminx"), F.col("tminy"),
+                F.col("rings"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("jvm"),
         ).collect()
@@ -169,8 +171,6 @@ def _random_holed_cases(n: int, seed: int):
 
 class TestJvmClipHoledParity:
     def test_bit_identical_to_kernel_holed(self, spark):
-        from georip_spark.operators import jvm_wkt
-
         rows = _random_holed_cases(600, seed=23)
         df = spark.createDataFrame(
             rows,
@@ -182,16 +182,14 @@ class TestJvmClipHoledParity:
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("kern"),
-            jvm_clip.clip_normalize_coords_mp(
-                jvm_wkt.rings_expr(F.col("geometry")),
-                F.col("tminx"), F.col("tminy"),
+            jvm_clip.clip_normalize_coords(
+                F.col("rings"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
                 g_bbox=(F.col("minx"), F.col("miny"),
                         F.col("maxx"), F.col("maxy")),
             ).alias("jvm"),
-            jvm_clip.clip_normalize_coords_mp(
-                jvm_wkt.rings_expr(F.col("geometry")),
-                F.col("tminx"), F.col("tminy"),
+            jvm_clip.clip_normalize_coords(
+                F.col("rings"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("jvm_nobox"),
         ).collect()
@@ -211,8 +209,6 @@ class TestJvmClipHoledParity:
         the SOLID part must win even though the holed shell is bigger;
         and a negative-key single part must still be emitted (max over
         one candidate)."""
-        from georip_spark.operators import jvm_wkt
-
         rows = [
             # part A: 20×20 shell with 18×18 hole (key=76);
             # part B: 10×10 solid (key=100) → B wins
@@ -237,9 +233,8 @@ class TestJvmClipHoledParity:
                 F.col("geometry"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("kern"),
-            jvm_clip.clip_normalize_coords_mp(
-                jvm_wkt.rings_expr(F.col("geometry")),
-                F.col("tminx"), F.col("tminy"),
+            jvm_clip.clip_normalize_coords(
+                F.col("rings"), F.col("tminx"), F.col("tminy"),
                 F.col("tmaxx"), F.col("tmaxy"),
             ).alias("jvm"),
         ).collect()
@@ -261,7 +256,7 @@ def tiny(spark):
 
 
 # a rectangle, a triangle and a polygon with a hole: one region per
-# clip arm (rect column math, hole-free S-H, hole-aware S-H)
+# input shape (the rect arm, then the general arm without and with holes)
 _HOLED_GEOMS = [
     "POLYGON ((5 5, 50 5, 50 30, 5 30, 5 5))",
     "POLYGON ((70 20, 120 35, 90 120, 70 20))",
@@ -270,8 +265,8 @@ _HOLED_GEOMS = [
 ]
 
 
-def _holed_inputs(spark):
-    """One 128×128 raster and the _HOLED_GEOMS regions over it."""
+def _holed_inputs(spark, geoms=tuple(_HOLED_GEOMS)):
+    """One 128×128 raster and the ``geoms`` regions over it."""
     rasters = spark.createDataFrame(
         [("R1_2019to2020_X", 128, 128, 64, 64,
           {"a": 1.0, "b": 0.0, "c": 0.0, "d": 0.0, "e": -1.0, "f": 128.0})],
@@ -279,7 +274,7 @@ def _holed_inputs(spark):
         "stride int, transform map<string,double>",
     )
     regions = spark.createDataFrame(
-        [("R1", 2019, 2020, "Treatment", g) for g in _HOLED_GEOMS],
+        [("R1", 2019, 2020, "Treatment", g) for g in geoms],
         "region string, start_year int, end_year int, "
         "class_name string, geometry string",
     )
@@ -299,6 +294,15 @@ def _spatial_join_lines(plan: str) -> list[str]:
     ]
 
 
+def _clip_generate(plan: str) -> str:
+    """The plan's clip Generate line with expression ids masked."""
+    (line,) = [
+        line for line in plan.splitlines()
+        if "Generate explode(array(CASE WHEN is_rect_blccw#" in line
+    ]
+    return re.sub(r"#\d+", "#", line.strip())
+
+
 def _docs_out(spark, tiny, entry: str):
     """docs_out of one entry point over the tiny inputs."""
     from georip_spark import synth
@@ -314,7 +318,7 @@ def _docs_out(spark, tiny, entry: str):
 def _assert_clip_once_after_join(plan: str) -> None:
     """The spatial hash join's condition holds only the equi-keys plus
     the bbox and reference-point tests, and the clip tree (the CASE
-    over the rect / S-H arms) appears exactly once in the plan."""
+    over the rect and general arms) appears exactly once in the plan."""
     (join,) = _spatial_join_lines(plan)
     assert "lambdafunction" not in join
     assert "is_rect_blccw" not in join
@@ -323,12 +327,10 @@ def _assert_clip_once_after_join(plan: str) -> None:
 
 class TestPlanShape:
     def test_no_arrow_eval_without_holes(self, spark, tiny):
-        """The hot build_labels stage must contain NO ArrowEvalPython
-        when no valid region has holes — the whole point of the JVM
-        clip paths (python-lane bandwidth is the N→4N scaling
-        bottleneck, NOTES.md round 4). Since the JVM WKT stats landed
-        (jvm_wkt.attach_stats, the dim-prepare default) the count is
-        ZERO: no Python anywhere in the plan."""
+        """build_labels over the hole-free synth dim plans no Python
+        at all (no ArrowEvalPython: the dim stats and both clip arms
+        are JVM column math) and one clip CASE: the rect arm, then the
+        general arm over the ring arrays."""
         from georip_spark.operators.joins import prepare_regions
         from georip_spark.operators.tiling import tile_grid
         from georip_spark.pipeline import build_labels, class_map
@@ -337,16 +339,17 @@ class TestPlanShape:
         tiles = tile_grid(rasters)
         prep = prepare_regions(regions)
         labels = build_labels(tiles, prep, class_map(regions))
-        plan = labels._jdf.queryExecution().executedPlan().toString()
+        plan = _plan_string(labels)
         assert plan.count("ArrowEvalPython") == 0
-        assert "rings#" not in plan  # two-way CASE: no hole-aware arm
+        assert "rings#" in plan
+        _assert_clip_once_after_join(plan)
 
     def test_holed_regions_stay_jvm(self, spark):
         """A dim with a rectangle, a triangle and a polygon WITH a hole
-        plans all three clip arms in one build_dataset plan — rect
-        column math, hole-free S-H, hole-aware S-H
-        (clip_normalize_coords_mp) — with NO Arrow node anywhere, and
-        every arm matches the Arrow kernel."""
+        clips all three in one build_dataset plan — the rect arm, then
+        the general arm for both the triangle and the holed polygon —
+        with NO Arrow node anywhere, and every row matches the Arrow
+        kernel."""
         from kernel_oracle import kernel_labels
 
         from georip_spark.pipeline import build_dataset
@@ -354,17 +357,17 @@ class TestPlanShape:
         rasters, regions = _holed_inputs(spark)
         out = build_dataset(rasters, regions)
         stats = {
-            r["geometry"]: (r["is_rect_blccw"], r["has_holes"])
+            r["geometry"]: (r["is_rect_blccw"], [len(p) for p in r["rings"]])
             for r in out["regions_prepared"].collect()
         }
         assert [stats[g] for g in _HOLED_GEOMS] == [
-            (True, False), (False, False), (False, True)
+            (True, [1]), (False, [1]), (False, [2])
         ]
         labels = out["labels"]
         rows = labels.select("media_ref", "label").collect()
-        plan = labels._jdf.queryExecution().executedPlan().toString()
+        plan = _plan_string(labels)
         assert "ArrowEvalPython" not in plan  # holed rows clip JVM-side too
-        assert "rings#" in plan  # the hole-aware arm is planned
+        _assert_clip_once_after_join(plan)
 
         # every region clips into some tile, and the result equals the
         # kernel-only labels
@@ -374,6 +377,19 @@ class TestPlanShape:
         assert kern.select("geom_id").distinct().count() == len(_HOLED_GEOMS)
         slow = kern.select("media_ref", "label").collect()
         assert sorted(map(tuple, rows)) == sorted(map(tuple, slow))
+
+    def test_one_clip_plan_for_holed_and_hole_free(self, spark):
+        """Holes do not change the plan: build_dataset's clip Generate
+        is the same expression over a dim with a holed polygon and
+        over the same dim without it."""
+        from georip_spark.pipeline import build_dataset
+
+        def clip(geoms):
+            rasters, regions = _holed_inputs(spark, geoms)
+            docs = build_dataset(rasters, regions)["docs_out"]
+            return _clip_generate(_plan_string(docs))
+
+        assert clip(_HOLED_GEOMS) == clip(_HOLED_GEOMS[:2])
 
     @pytest.mark.parametrize(
         "entry", ["build_dataset", "build_dataset_shuffle", "from_docs"]
@@ -393,15 +409,13 @@ class TestPlanShape:
         assert "ExistingRDD" not in _plan_string(_docs_out(spark, tiny, entry))
 
     def test_holed_shuffle_clips_once_after_join(self, spark):
-        """The three-arm clip (rect, S-H, hole-aware S-H) stays out of
-        the shuffled hash join's condition too."""
+        """Over a holed dim the clip stays out of the shuffled hash
+        join's condition too."""
         from georip_spark.pipeline import build_dataset
 
         rasters, regions = _holed_inputs(spark)
         out = build_dataset(rasters, regions, broadcast_regions=False)
-        plan = _plan_string(out["docs_out"])
-        assert "rings#" in plan
-        _assert_clip_once_after_join(plan)
+        _assert_clip_once_after_join(_plan_string(out["docs_out"]))
 
     def test_lineage_clips_once_after_join(self, spark, tiny, tmp_path):
         """run_pipeline_with_lineage's docs stage is _plan's docs_out."""

@@ -14,7 +14,7 @@ from georip_spark.operators.jvm_wkt import attach_stats
 
 FIELDS = [
     "minx", "miny", "maxx", "maxy", "is_empty", "is_valid", "area",
-    "is_rect_blccw", "shells", "has_holes",
+    "is_rect_blccw", "rings",
 ]
 
 ADVERSARIAL = [
@@ -57,6 +57,28 @@ ADVERSARIAL = [
 ]
 
 
+# valid holed regions, in every WKT spelling the parse must accept
+HOLED = [
+    # whitespace variants
+    "POLYGON((0 0,10 0,10 10,0 10,0 0),(2 2,3 2,3 3,2 3,2 2))",
+    "POLYGON ( ( 0 0 , 10 0 , 10 10 , 0 10 , 0 0 ) ,\n\t( 2 2 , 3 2 , 3 3 , 2 3 , 2 2 ) )",
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0)\t,\t(2 2, 3 2, 3 3, 2 3, 2 2))",
+    # lower-case tags
+    "polygon ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2))",
+    "multipolygon (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)))",
+    # Z coordinates
+    "POLYGON Z ((0 0 1, 10 0 1, 10 10 1, 0 10 1, 0 0 1), (2 2 1, 3 2 1, 3 3 1, 2 3 1, 2 2 1))",
+    # a MULTIPOLYGON with one holed part, first or last
+    "MULTIPOLYGON (((20 20, 22 20, 22 22, 20 20)), "
+    "((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)))",
+    "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)), "
+    "((20 20, 22 20, 22 22, 20 20)))",
+    # two holes in one polygon
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2), "
+    "(5 5, 6 5, 6 6, 5 6, 5 5))",
+]
+
+
 def _arrow_stats(df, geom_col):
     """The Arrow kernel's stats struct, expanded to one column per field."""
     return df.withColumn("_g", geom_udfs.geom_bounds(F.col(geom_col))).select(
@@ -83,8 +105,8 @@ def assert_parity(spark, wkts):
     for i, w in enumerate(wkts):
         for f in FIELDS:
             a, b = jvm[i][f], arrow[i][f]
-            if f == "shells":
-                assert a == b, f"shells mismatch on {w!r}: {a} vs {b}"
+            if f == "rings":
+                assert a == b, f"rings mismatch on {w!r}: {a} vs {b}"
             elif f == "area":
                 # strictly-sequential fold vs np.sum pairwise: last-ULP
                 assert (a == b or abs(a - b) <= 1e-9 * max(1.0, abs(b))), \
@@ -94,7 +116,7 @@ def assert_parity(spark, wkts):
 
 
 def test_adversarial_parity(spark):
-    assert_parity(spark, ADVERSARIAL)
+    assert_parity(spark, ADVERSARIAL + HOLED)
 
 
 def test_synth_corpus_parity(spark):
@@ -134,71 +156,4 @@ def test_jvm_flags(spark, wkt_s, valid, rect, holes):
     r = attach_stats(df, "geometry").collect()[0]
     assert r["is_valid"] is valid
     assert r["is_rect_blccw"] is rect
-    assert r["has_holes"] is holes
-
-
-HOLED = [
-    # whitespace variants
-    "POLYGON((0 0,10 0,10 10,0 10,0 0),(2 2,3 2,3 3,2 3,2 2))",
-    "POLYGON ( ( 0 0 , 10 0 , 10 10 , 0 10 , 0 0 ) ,\n\t( 2 2 , 3 2 , 3 3 , 2 3 , 2 2 ) )",
-    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0)\t,\t(2 2, 3 2, 3 3, 2 3, 2 2))",
-    # lower-case tags
-    "polygon ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2))",
-    "multipolygon (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)))",
-    # Z coordinates
-    "POLYGON Z ((0 0 1, 10 0 1, 10 10 1, 0 10 1, 0 0 1), (2 2 1, 3 2 1, 3 3 1, 2 3 1, 2 2 1))",
-    # a MULTIPOLYGON with one holed part, first or last
-    "MULTIPOLYGON (((20 20, 22 20, 22 22, 20 20)), "
-    "((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)))",
-    "MULTIPOLYGON (((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2)), "
-    "((20 20, 22 20, 22 22, 20 20)))",
-    # two holes in one polygon
-    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 3 2, 3 3, 2 3, 2 2), "
-    "(5 5, 6 5, 6 6, 5 6, 5 5))",
-    # a third coordinate token ending in ')' parses (only x and y are
-    # read), so this is valid and holed with ')' left of the '),(':
-    # the pre-test's right-flank branch catches it
-    "POLYGON ((0 0, 4 0, 4 4, 0 0 9)), (1 1, 2 1, 2 2, 1 1))",
-]
-
-
-def _holed_flags(spark, wkts):
-    """id -> (is_valid & has_holes, may_have_holes) on the JVM path."""
-    from georip_spark.operators.jvm_wkt import may_have_holes
-
-    df = spark.createDataFrame(list(enumerate(wkts)), "id long, geometry string")
-    out = attach_stats(df, "geometry").select(
-        "id",
-        (F.col("is_valid") & F.col("has_holes")).alias("holed"),
-        may_have_holes(F.col("geometry")).alias("may"),
-    )
-    return {r["id"]: (r["holed"], r["may"]) for r in out.collect()}
-
-
-def test_hole_pretest_is_sound(spark):
-    """may_have_holes (the planner's text test) is true wherever the
-    parse finds a valid holed region, over the adversarial corpus and
-    the holed variants above."""
-    wkts = ADVERSARIAL + HOLED
-    flags = _holed_flags(spark, wkts)
-    for i, w in enumerate(wkts):
-        holed, may = flags[i]
-        if holed:
-            assert may, f"holed WKT missed by the pre-test: {w!r}"
-    # every HOLED variant really is valid and holed on the JVM path
-    assert all(flags[len(ADVERSARIAL) + i][0] for i in range(len(HOLED)))
-
-
-def test_hole_pretest_false_on_synth_dim(spark):
-    """The synth dim has multipolygons and no holes: the pre-test is
-    false on every row, so the pipeline keeps the two-way clip CASE."""
-    from georip_spark import synth
-
-    rasters = synth.synth_rasters(spark, 100)
-    wkts = [
-        r[0] for r in synth.synth_regions(spark, rasters, polys_per_doc=3)
-        .select("geometry").collect()
-    ]
-    assert any(w.upper().startswith("MULTIPOLYGON") for w in wkts)
-    flags = _holed_flags(spark, wkts)
-    assert not any(may for _, may in flags.values())
+    assert any(len(poly) > 1 for poly in r["rings"]) is holes

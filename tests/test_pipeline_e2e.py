@@ -322,10 +322,11 @@ def test_auto_salt_reads_histogram_once(spark, stored):
 
 
 class TestZeroJobPlanning:
-    """Planning an entry point launches one dim-side aggregate (two
-    jobs under AQE: its shuffle map stage and the result) and no
-    fact-side job; the doc partitioning is set once, with an explicit
-    count, and assemble_docs adds no doc_id exchange."""
+    """Planning an entry point launches no fact-side job, and with
+    broadcast_regions=None one dim-side job, the region count (two
+    jobs under AQE: its shuffle map stage and the result); the doc
+    partitioning is set once, with an explicit count, and
+    assemble_docs adds no doc_id exchange."""
 
     def test_build_dataset(self, spark, stored, engine_out):
         out, jobs = _plan_jobs(
@@ -358,6 +359,44 @@ class TestZeroJobPlanning:
         assert spans_from_engine(out["docs_out"]) == spans_from_engine(
             engine_out["docs_out"]
         )
+
+
+    @pytest.mark.parametrize("entry,bcast", [
+        ("build_dataset", True), ("from_docs", False),
+    ])
+    def test_no_job_given_the_regime(self, spark, stored, engine_out, entry, bcast):
+        """Given broadcast_regions, planning launches no Spark job."""
+        from georip_spark.pipeline import from_docs
+
+        def plan():
+            if entry == "from_docs":
+                return from_docs(
+                    stored["docs"], stored["rasters"], stored["regions"],
+                    broadcast_regions=bcast,
+                )
+            return build_dataset(
+                stored["rasters"], stored["regions"], broadcast_regions=bcast
+            )
+
+        out, jobs = _plan_jobs(spark, plan)
+        assert jobs == 0
+        assert spans_from_engine(out["docs_out"]) == spans_from_engine(
+            engine_out["docs_out"]
+        )
+
+    def test_build_labels_no_job(self, spark, stored):
+        """build_labels plans its clip without probing the dim."""
+        from georip_spark.operators.joins import prepare_regions
+        from georip_spark.operators.tiling import tile_grid
+        from georip_spark.pipeline import build_labels, class_map
+
+        regions = stored["regions"]
+        labels, jobs = _plan_jobs(spark, lambda: build_labels(
+            tile_grid(stored["rasters"]), prepare_regions(regions),
+            class_map(regions),
+        ))
+        assert jobs == 0
+        assert labels.count() > 0
 
 
 class TestRectFastPath:
