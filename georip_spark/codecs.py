@@ -253,16 +253,3 @@ def png_decode(data: bytes) -> np.ndarray:
             return np.dstack([rgb, alpha[idx]])
         return rgb
     return arr[:, :, 0] if samples == 1 else arr
-
-
-# ---------------------------------------------------------------------------
-# dispatch
-# ---------------------------------------------------------------------------
-
-def sniff(payload: bytes) -> str | None:
-    """Identify a payload by magic bytes: 'png' | 'jpeg' | None."""
-    if payload[:8] == _PNG_SIG:
-        return "png"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    return None

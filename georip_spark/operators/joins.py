@@ -150,10 +150,9 @@ def spatial_join_tiles_regions(
             "cannot exclude 'geometry' from the carry when refine/clip "
             "need it post-join"
         )
-    g = regions_prepared.withColumnRenamed("minx", "g_minx") \
-        .withColumnRenamed("miny", "g_miny") \
-        .withColumnRenamed("maxx", "g_maxx") \
-        .withColumnRenamed("maxy", "g_maxy")
+    g = regions_prepared.withColumnsRenamed(
+        {c: f"g_{c}" for c in ("minx", "miny", "maxx", "maxy")}
+    )
 
     keys = ["region", "start_year", "end_year"] if on_years else []
 

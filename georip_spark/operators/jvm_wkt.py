@@ -20,18 +20,15 @@ Parsing strategy (mirrors georip_spark/geo/wkt.parse_wkt):
 - coordinates cast to double (correctly-rounded IEEE, same value
   Python float() produces); a missing/non-numeric coordinate makes
   the whole geometry parse-fail to the EMPTY row, exactly like the
-  kernel path's ValueError/IndexError handler (geom_udfs._memo_parse).
+  kernel path's ValueError/IndexError handler (geom_udfs._memo_parse);
+- a point token that still holds '(' or ')' after the splits (a
+  stray paren the literal splits did not consume) fails the geometry
+  to EMPTY, as the depth parser rejects it.
 
-Known, documented divergences from the Python parser (none reachable
-from engine-serialized WKT, all property-swept in test_jvm_wkt):
-- coordinate tokens 'inf'/'nan' parse via Python float() but cast to
-  NULL here → EMPTY row (safer than propagating non-finite geometry);
-- exotic malformed fragments that the depth parser happens to accept
-  differently. Every malformed case in the sweep converges to the
-  EMPTY row on both sides, but not every malformed string does:
-  'POLYGON ((0 0, 4 0, 4 4, 0 0 9)), (1 1, 2 1, 2 2, 1 1))' (a stray
-  ')' in an ignored third coordinate token) is EMPTY in Python and a
-  valid holed polygon here.
+Known, documented divergence from the Python parser (not reachable
+from engine-serialized WKT, property-swept in test_jvm_wkt):
+coordinate tokens 'inf'/'nan' parse via Python float() but cast to
+NULL here → EMPTY row (safer than propagating non-finite geometry).
 
 Bit-compatibility: the shoelace folds are STRICTLY SEQUENTIAL left
 folds (kernels.seq_ring_area order: acc + (x_i*y_j - x_j*y_i)), not
@@ -91,10 +88,15 @@ def _parse_poly_body(mpbody: Column) -> Column:
 
     def parse_pt(pt_s: Column) -> Column:
         toks = F.filter(F.split(pt_s, r"\s+"), lambda t: t != F.lit(""))
-        return F.struct(
+        pt = F.struct(
             F.get(toks, 0).try_cast("double").alias("x"),
             F.get(toks, 1).try_cast("double").alias("y"),
         )
+        # a stray paren (even in an ignored third token) nulls the
+        # POINT, which the caller's `bad` test turns into EMPTY; a null
+        # ring would slip past it (exists over a flatten with a null
+        # element is null)
+        return F.when(~pt_s.rlike("[()]"), pt)
 
     def parse_ring(ring_s: Column) -> Column:
         return F.transform(F.split(ring_s, r","), parse_pt)

@@ -55,16 +55,11 @@ def tile_grid(
     ).withColumn(
         "tile_col", F.explode(F.sequence(F.lit(0), F.col("width") - 1, F.col("stride")))
     )
-    # row-major ordinal (loop order of the reference): row index * ncols + col index
-    ncols = F.ceil(F.col("width") / F.col("stride")).cast("int")
     df = df.select(
         "doc_id",
         "tile_row",
         "tile_col",
-        F.least(F.col("tile_size"), F.col("width") - F.col("tile_col")).alias("tile_w"),
-        F.least(F.col("tile_size"), F.col("height") - F.col("tile_row")).alias("tile_h"),
-        ((F.col("tile_row") / F.col("stride")).cast("int") * ncols
-         + (F.col("tile_col") / F.col("stride")).cast("int")).alias("ordinal"),
+        *tile_window(F.col("tile_row"), F.col("tile_col")),
         GF.tile_media_ref(F.col("doc_id"), F.col("tile_row"), F.col("tile_col")).alias("media_ref"),
         "transform",
         "tile_size",
@@ -73,6 +68,22 @@ def tile_grid(
     if with_footprint:
         df = with_footprint_bbox(df)
     return df.drop("transform")
+
+
+def tile_window(tile_row: Column, tile_col: Column) -> tuple[Column, Column, Column]:
+    """``tile_w``, ``tile_h`` and ``ordinal`` of the window whose pixel
+    origin is (tile_row, tile_col), over the raster's width/height/
+    tile_size/stride columns: edge tiles clamped to the raster, and
+    the ordinal row-major over ceil(width/stride) columns (the loop
+    order of the reference)."""
+    stride = F.col("stride")
+    ncols = F.ceil(F.col("width") / stride).cast("int")
+    return (
+        F.least(F.col("tile_size"), F.col("width") - tile_col).alias("tile_w"),
+        F.least(F.col("tile_size"), F.col("height") - tile_row).alias("tile_h"),
+        ((tile_row / stride).cast("int") * ncols
+         + (tile_col / stride).cast("int")).alias("ordinal"),
+    )
 
 
 def doc_partitioned(df: DataFrame) -> DataFrame:
@@ -108,9 +119,9 @@ def with_footprint_bbox(tiles: DataFrame) -> DataFrame:
     r1, c1 = r0 + F.col("tile_h"), c0 + F.col("tile_w")
     xs = [affine.px_to_x(t, c, r) for c, r in ((c0, r0), (c1, r0), (c1, r1), (c0, r1))]
     ys = [affine.px_to_y(t, c, r) for c, r in ((c0, r0), (c1, r0), (c1, r1), (c0, r1))]
-    return (
-        tiles.withColumn("minx", F.least(*xs))
-        .withColumn("miny", F.least(*ys))
-        .withColumn("maxx", F.greatest(*xs))
-        .withColumn("maxy", F.greatest(*ys))
-    )
+    return tiles.withColumns({
+        "minx": F.least(*xs),
+        "miny": F.least(*ys),
+        "maxx": F.greatest(*xs),
+        "maxy": F.greatest(*ys),
+    })

@@ -17,7 +17,7 @@ vs the pandas oracle.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from georip_spark import functions as GF
@@ -32,6 +32,7 @@ from georip_spark.operators.joins import (
 from georip_spark.operators.tiling import (
     doc_partitioned,
     tile_grid,
+    tile_window,
     with_footprint_bbox,
 )
 
@@ -116,15 +117,11 @@ def tiles_from_docs(docs: DataFrame, rasters: DataFrame) -> DataFrame:
     ).filter(F.col("span.kind") == "media")
     tile_row = F.regexp_extract(F.col("span.media_ref"), _TILE_REF_RE, 1).cast("int")
     tile_col = F.regexp_extract(F.col("span.media_ref"), _TILE_REF_RE, 2).cast("int")
-    ncols = F.ceil(F.col("width") / F.col("stride")).cast("int")
     tiles = m.select(
         "doc_id",
         tile_row.alias("tile_row"),
         tile_col.alias("tile_col"),
-        F.least(F.col("tile_size"), F.col("width") - tile_col).alias("tile_w"),
-        F.least(F.col("tile_size"), F.col("height") - tile_row).alias("tile_h"),
-        ((tile_row / F.col("stride")).cast("int") * ncols
-         + (tile_col / F.col("stride")).cast("int")).alias("ordinal"),
+        *tile_window(tile_row, tile_col),
         F.col("span.media_ref").alias("media_ref"),
         "transform",
         "tile_size",
@@ -263,62 +260,6 @@ def class_map(regions: DataFrame, keep_classes=DEFAULT_CLASSES) -> DataFrame:
     )
 
 
-_EPS64 = 2.220446049250313e-16  # np.finfo(float64).eps
-
-
-# shared with the general JVM clip path (operators/jvm_clip.py);
-# re-exported here for the rect fast path and the round-trip tests
-_round6_even = jvm_clip.round6_even
-
-
-def _rect_clip_coords() -> Column:
-    """JVM fast path for the clip+normalize of an axis-aligned
-    rectangle region (``is_rect_blccw``) against the tile rect — the
-    whole-stage-codegen replacement for the Arrow clip kernel on the
-    hot path (UDFs are the slow lane; rectangle labels are the
-    dominant case in the contract workload).
-
-    Bit-compatibility with ``geom_udfs.clip_and_normalize``:
-    - intersection corners are the same greatest/least IEEE ops the
-      Sutherland–Hodgman crossings snap to (kernels.py:158);
-    - the vertex ORDER reproduces S-H exactly — BL-start when the
-      region's bottom edge survives, BR-start when it is clipped
-      (property-swept vs the kernel on 2.8k random overlapping
-      rect pairs: 0 mismatches, including empties and the zero-area
-      floor) — the same rule the driver oracle encodes in _q31_sql;
-    - the ring-local zero-area floor (4·n·eps·max(1,ext)², n=5) and
-      np.round's binary HALF_EVEN are mirrored exactly.
-
-    Expects tile bbox (minx/miny/maxx/maxy) and region bbox
-    (g_minx/g_miny/g_maxx/g_maxy) columns; null when the intersection
-    is empty/degenerate (same contract as the kernel)."""
-    ix0 = F.greatest(F.col("g_minx"), F.col("minx"))
-    ix1 = F.least(F.col("g_maxx"), F.col("maxx"))
-    iy0 = F.greatest(F.col("g_miny"), F.col("miny"))
-    iy1 = F.least(F.col("g_maxy"), F.col("maxy"))
-    iw = ix1 - ix0
-    ih = iy1 - iy0
-    m = F.greatest(F.lit(1.0), F.greatest(iw, ih))
-    tol = F.lit(20.0 * _EPS64) * m * m
-    w = F.col("maxx") - F.col("minx")
-    h = F.col("maxy") - F.col("miny")
-
-    def clip01(c: Column) -> Column:
-        return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))
-
-    uL = _round6_even(clip01((ix0 - F.col("minx")) / w))
-    uR = _round6_even(clip01((ix1 - F.col("minx")) / w))
-    vB = _round6_even(clip01((F.col("maxy") - iy0) / h))
-    vT = _round6_even(clip01((F.col("maxy") - iy1) / h))
-    bl = F.array(uL, vB, uR, vB, uR, vT, uL, vT, uL, vB)
-    br = F.array(uR, vB, uR, vT, uL, vT, uL, vB, uR, vB)
-    nonempty = (ix1 > ix0) & (iy1 > iy0) & (iw * ih > tol)
-    return F.when(
-        nonempty,
-        F.when(F.col("g_miny") >= F.col("miny"), bl).otherwise(br),
-    )
-
-
 def build_labels(
     tiles: DataFrame,
     regions_prepared: DataFrame,
@@ -450,23 +391,13 @@ def build_labels(
     # (georip/datasets/utils.py:357-371) both moved DIM-side above:
     # class_id arrives attached and every joined row already satisfies
     # class_id >= 0 with a valid geometry.
-    # The rect fast path and the S-H tree are built from FIXED column
+    # The clip CASE (jvm_clip.clip_case) is built from FIXED column
     # names, so the (expensive, py4j-built) Column is memoized — see
     # exprcache module docstring for the measured driver-second costs
     # this removes from every re-plan. Both arms are bit-identical to
     # the Arrow kernel (geom_udfs.clip_and_normalize, the tests' parity
     # oracle), so the hot stage has NO ArrowEvalPython for any input.
-    coords = cached_column(
-        ("pipeline.clip",),
-        lambda: F.when(F.col("is_rect_blccw"), _rect_clip_coords()).otherwise(
-            jvm_clip.clip_normalize_coords(
-                F.col("rings"), F.col("minx"), F.col("miny"),
-                F.col("maxx"), F.col("maxy"),
-                g_bbox=(F.col("g_minx"), F.col("g_miny"),
-                        F.col("g_maxx"), F.col("g_maxy")),
-            )
-        ),
-    )
+    coords = cached_column(("pipeline.clip",), jvm_clip.clip_case)
     # The Generate is a barrier that keeps the clip ONCE, after the
     # join: a filter on a Generate's output is never pushed below it,
     # and InferFiltersFromGenerate skips a CreateArray child. Without

@@ -10,7 +10,9 @@ import georip_spark
 from georip_spark import codecs
 from georip_spark.operators import jvm_clip, jvm_wkt
 
-RETIRED = ("georip_spark.operators.multimodal", "georip_spark.avi")
+RETIRED = (
+    "georip_spark.operators.multimodal", "georip_spark.avi", "georip_spark.jpeg",
+)
 
 
 def test_kept_modules_load_nothing_retired(monkeypatch):
@@ -24,6 +26,7 @@ def test_kept_modules_load_nothing_retired(monkeypatch):
         importlib.import_module(name)
     assert [n for n in RETIRED if n in sys.modules] == []
     assert [a for a in dir(codecs) if a.startswith("wav_")] == []
+    assert not hasattr(codecs, "sniff")
     # one clip arm, fed by the one WKT parse
     assert not hasattr(jvm_wkt, "may_have_holes")
     assert not hasattr(jvm_wkt, "rings_expr")

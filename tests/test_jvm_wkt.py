@@ -54,6 +54,9 @@ ADVERSARIAL = [
     "POLYGON ((1, 2 3, 4 5, 1))",
     "garbage",
     "POLYGON ((1 2, 3 4, 5 6, 1 2)) trailing",
+    # a stray ')' in an ignored third coordinate token
+    "POLYGON ((0 0, 4 0, 4 4, 0 0 9)), (1 1, 2 1, 2 2, 1 1))",
+    "MULTIPOLYGON (((0 0, 4 0, 4 4, 0 0 9)), (1 1, 2 1, 2 2, 1 1)))",
 ]
 
 

@@ -449,7 +449,7 @@ class TestRectFastPath:
     def test_round6_even_matches_numpy(self, spark):
         import numpy as np
 
-        from georip_spark.pipeline import _round6_even
+        from georip_spark.operators.jvm_clip import round6_even
 
         rng = np.random.default_rng(3)
         vals = np.concatenate([
@@ -459,6 +459,6 @@ class TestRectFastPath:
         ])
         df = spark.createDataFrame([(float(v),) for v in vals], "x double")
         got = [r["r"] for r in
-               df.select(_round6_even(F.col("x")).alias("r")).collect()]
+               df.select(round6_even(F.col("x")).alias("r")).collect()]
         want = np.round(vals, 6)
         assert all(g == w for g, w in zip(got, want))
